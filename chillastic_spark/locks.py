@@ -3,7 +3,7 @@
 The reference coordinates N worker processes through Redis atomics
 (subtasks.js:45-69 rpush/hset; worker.js:61-123). This repo's parquet
 store and JSON task state have no transaction log, so the documented
-single-writer rule (sinks/__init__.py) is enforced here with
+single-writer rule (sources/__init__.py) is enforced here with
 ``fcntl.flock`` instead of being silently assumed: a second PROCESS
 touching the same task state fails fast (or blocks, for index merges)
 rather than corrupting the backlog or losing a directory swap.

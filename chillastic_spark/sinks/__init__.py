@@ -19,25 +19,30 @@ has no transaction log.
 
 The first upsert against a flat index migrates it to the bucketed
 layout (one full rewrite, once), mirroring how a Delta conversion works.
+Every rewrite here follows the store's rewrite protocol (locks, heal,
+scratch write, two-rename swap), defined once in
+:mod:`chillastic_spark.sources`.
 """
 from __future__ import annotations
 
 import os
-import shutil
-import threading
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from chillastic_spark.locks import FileLock
 from chillastic_spark.sources import (
+    BUCKET_MARKER,
     ENVELOPE_SCHEMA,
     N_BUCKETS_DEFAULT,
     DocumentStore,
     bucket_expr,
+    scratch_dir,
+    store_mutation,
+    swap_dir,
+    write_bucket_tmp,
 )
+from chillastic_spark.sources.maintenance import _is_type_partitioned, file_stats
 
 KEY = ["_index", "_type", "_id"]
 
@@ -56,19 +61,25 @@ def _key_cond(a: DataFrame, b: DataFrame):
         operator.and_, [a[k].eqNullSafe(b[k]) for k in KEY]
     )
 
-# The parquet store has no transaction log, so one-writer-per-index is
-# enforced here: concurrent read-merge-swap on the same index dir
-# (Engine.run_task parallelism>1, or two REST /_run calls in the same
-# process) would lose one writer's rows or crash mid-os.rename. Cross-
-# PROCESS safety comes from the fcntl lock in locks.py. Delta/Iceberg
-# MERGE replaces both with real transactions at scale.
-_INDEX_LOCKS: dict[str, threading.Lock] = {}
-_INDEX_LOCKS_GUARD = threading.Lock()
+
+def dedup_within_batch(df: DataFrame) -> DataFrame:
+    """Keep ONE row per (_index,_type,_id), chosen by a DETERMINISTIC
+    tie-break: highest md5(_source), then _size. "Arrival order" is not
+    meaningful after a distributed mutate (and would vary with
+    partitioning); a stable winner keeps re-runs byte-identical. Shared
+    by this sink and the Delta sink (whose MERGE throws on two source
+    rows matching one target)."""
+    rank = F.row_number().over(
+        Window.partitionBy(*KEY).orderBy(F.desc(F.md5(F.col("_source"))), F.desc("_size"))
+    )
+    return df.withColumn("__rk", rank).filter(F.col("__rk") == 1).drop("__rk")
 
 
-def _index_lock(path: str) -> threading.Lock:
-    with _INDEX_LOCKS_GUARD:
-        return _INDEX_LOCKS.setdefault(os.path.abspath(path), threading.Lock())
+def _touched_buckets(df: DataFrame, n_buckets: int) -> list[int]:
+    """Sorted hash buckets holding ``df``'s ids (one small collect)."""
+    return sorted(
+        r["b"] for r in df.select(bucket_expr(n_buckets).alias("b")).distinct().collect()
+    )
 
 
 def _normalise(df: DataFrame) -> DataFrame:
@@ -93,8 +104,6 @@ def _auto_buckets(index_path: str) -> int:
     stays at the floor and out of small-file territory."""
     import math
 
-    from chillastic_spark.sources.maintenance import file_stats
-
     total = file_stats(index_path)["total_bytes"] if os.path.isdir(index_path) else 0
     target = max(total // (256 << 20), 1)
     n = 1 << math.ceil(math.log2(target)) if target > 1 else 1
@@ -109,29 +118,25 @@ def upsert(
 ) -> int:
     """MERGE ``df`` into ``store`` keyed on (_index,_type,_id).
 
-    Within-batch duplicates keep ONE row chosen by a deterministic
-    tie-break (highest md5(_source), then _size) — "arrival order" is
-    not meaningful in a distributed DataFrame, and the stable winner
-    keeps re-runs (and the Delta sink, which pins the SAME rule)
-    byte-identical. Returns rows delivered. ``n_buckets``
+    Within-batch duplicates keep ONE row (:func:`dedup_within_batch`,
+    the rule the Delta sink shares). Returns rows delivered. ``n_buckets``
     applies only when an index is first converted to the bucketed
     layout (default: sized from the index bytes, see _auto_buckets);
     an already-bucketed index keeps its pinned N.
     """
-    df = _normalise(df)
-    # Within-batch conflicts on the same key keep ONE row chosen by a
-    # DETERMINISTIC tie-break (payload hash). "Arrival order" is not
-    # meaningful after a distributed mutate (and would vary with
-    # partitioning); a stable winner keeps re-runs byte-identical.
-    w_rank = F.row_number().over(
-        Window.partitionBy(*KEY).orderBy(F.desc(F.md5(F.col("_source"))), F.desc("_size"))
-    )
-    df = df.withColumn("__rk", w_rank).filter(F.col("__rk") == 1).drop("__rk")
-    df = df.cache()
+    df = dedup_within_batch(_normalise(df)).cache()
     try:
-        delivered = 0
-        indices = [r["_index"] for r in df.select("_index").distinct().collect()]
-        if any(ix is None for ix in indices):
+        # the batch facts in ONE action (which also fills the cache):
+        # per destination index, its row count and its NULL-_id count
+        facts = (
+            df.groupBy("_index")
+            .agg(
+                F.count(F.lit(1)).alias("n"),
+                F.count_if(F.col("_id").isNull()).alias("null_ids"),
+            )
+            .collect()
+        )
+        if any(r["_index"] is None for r in facts):
             raise ValueError(
                 "upsert: rows with NULL _index cannot be delivered — "
                 "every envelope row needs a destination index"
@@ -142,122 +147,48 @@ def upsert(
         # __HIVE_DEFAULT_PARTITION__ dir on migration — where the
         # bucket-id parse aborts MID-rename-loop (rows already moved
         # duplicate on retry). Validate up front like _index.
-        if df.filter(F.col("_id").isNull()).limit(1).count():
+        if any(r["null_ids"] for r in facts):
             raise ValueError(
                 "upsert: rows with NULL _id cannot be delivered — the "
                 "merge key and the bucket hash both need a document id"
             )
-        for index in indices:
+        for r in facts:
+            index = r["_index"]
+            path = store.index_path(index)
             batch = df.filter(F.col("_index") == index)
-            delivered += batch.count()  # rows delivered = batch size
-            # thread lock serializes in-process writers; the flock makes
-            # a second PROCESS wait instead of racing the dir swaps
-            with _index_lock(store.index_path(index)), FileLock(
-                store.index_path(index) + ".lock"
-            ):
-                # heal any interrupted swap from a crashed prior
-                # delivery BEFORE reading — BOTH levels: the index-level
-                # two-rename window (migration/_atomic_replace — a
-                # missing live dir with the only copy stranded in
-                # .old-; restoring it + the idempotent re-merge is
-                # exactly-once) and the bucket-level window (a bucket
-                # whose live dir died mid-swap reads as empty, and
-                # merging against "empty" would permanently drop its
-                # pre-crash rows)
-                from chillastic_spark.sources import store_swap_window
-                from chillastic_spark.sources.maintenance import (
-                    _recover_interrupted_swap,
-                    recover_bucket_swaps,
-                )
-
-                with store_swap_window(store.index_path(index)):
-                    _recover_interrupted_swap(store.index_path(index))
-                    recover_bucket_swaps(store.index_path(index))
+            with store_mutation(path):
                 nb = store.bucket_count(index)
-                if nb is None:
-                    from chillastic_spark.sources.maintenance import (
-                        _is_type_partitioned,
-                    )
-
-                    existing = store.read(spark, index)
-                    merged = _normalise(
-                        existing.join(batch, _key_cond(existing, batch), "left_anti")
-                        .unionByName(batch)
-                    )
-                    if os.path.isdir(
-                        store.index_path(index)
-                    ) and _is_type_partitioned(store.index_path(index)):
-                        # an index laid out with Hive _type= partitions
-                        # (write_documents(partition_by=['_type']) — the
-                        # layout its docstring recommends at scale) must
-                        # KEEP that layout: silently rewriting it
-                        # bucketed would destroy the per-type partition
-                        # pruning and blind any stream reading the typed
-                        # subdirs — the same guarantee _atomic_replace
-                        # makes for compaction
-                        _replace_index_type_partitioned(store, index, merged)
-                    else:
-                        # one-time migration: flat (or empty) → bucketed
-                        n = n_buckets or _auto_buckets(store.index_path(index))
-                        if not 0 < n <= 9999:
-                            # bucket dirs are bucket-NNNN and the stream
-                            # glob matches exactly 4 digits — a 5-digit
-                            # bucket id would be written but silently
-                            # excluded from readStream
-                            raise ValueError(
-                                f"n_buckets must be in [1, 9999] (got {n})"
-                            )
-                        _replace_index_bucketed(store, index, merged, n)
-                else:
-                    touched = sorted(
-                        r["b"]
-                        for r in batch.select(bucket_expr(nb).alias("b"))
-                        .distinct()
-                        .collect()
-                    )
-                    existing = store.read(spark, index, buckets=touched)
-                    merged = _normalise(
-                        existing.join(batch, _key_cond(existing, batch), "left_anti")
-                        .unionByName(batch)
-                    )
+                touched = None if nb is None else _touched_buckets(batch, nb)
+                existing = store.read(spark, index, buckets=touched)
+                merged = _normalise(
+                    existing.join(batch, _key_cond(existing, batch), "left_anti")
+                    .unionByName(batch)
+                )
+                if nb is not None:
                     _replace_buckets(store, index, nb, merged, touched)
-        return delivered
+                elif os.path.isdir(path) and _is_type_partitioned(path):
+                    # an index laid out with Hive _type= partitions
+                    # (write_documents(partition_by=['_type']) — the
+                    # layout its docstring recommends at scale) must
+                    # KEEP that layout: silently rewriting it bucketed
+                    # would destroy the per-type partition pruning and
+                    # blind any stream reading the typed subdirs
+                    _atomic_replace(store, index, merged)
+                else:
+                    # one-time migration: flat (or empty) → bucketed
+                    n = n_buckets or _auto_buckets(path)
+                    if not 0 < n <= 9999:
+                        # bucket dirs are bucket-NNNN and the stream
+                        # glob matches exactly 4 digits — a 5-digit
+                        # bucket id would be written but silently
+                        # excluded from readStream
+                        raise ValueError(
+                            f"n_buckets must be in [1, 9999] (got {n})"
+                        )
+                    _replace_index_bucketed(store, index, merged, n)
+        return sum(r["n"] for r in facts)
     finally:
         df.unpersist()
-
-
-def _write_bucket_tmp(
-    store: DocumentStore, index: str, df: DataFrame, n_buckets: int
-) -> str:
-    """Materialise ``df`` into a temp dir partitioned by hash bucket.
-
-    The write runs BEFORE any live dir is touched, so a crash mid-merge
-    leaves the index exactly as it was."""
-    tmp = store.index_path(index) + ".merge-" + uuid.uuid4().hex[:8]
-    df.withColumn("__bucket", bucket_expr(n_buckets)).write.partitionBy(
-        "__bucket"
-    ).parquet(tmp)
-    return tmp
-
-
-def _swap_bucket(tmp: str, store: DocumentStore, index: str, b: int) -> None:
-    """Atomically install ``tmp/__bucket=b`` as the live bucket dir;
-    a bucket with no surviving rows is deleted (absent == empty)."""
-    from chillastic_spark.sources import store_swap_window
-
-    src = os.path.join(tmp, f"__bucket={b}")
-    target = store.bucket_path(index, b)
-    old = target + ".old-" + uuid.uuid4().hex[:8]
-    # rename window under the index's swap lock (r10): readers list
-    # bucket dirs under the SHARED side, so a read can never see this
-    # bucket mid-rename and silently serve the index without it
-    with store_swap_window(store.index_path(index)):
-        if os.path.exists(target):
-            os.rename(target, old)
-        if os.path.isdir(src):
-            os.rename(src, target)
-        if os.path.exists(old):
-            shutil.rmtree(old)
 
 
 def _replace_buckets(
@@ -265,81 +196,30 @@ def _replace_buckets(
     touched: list[int],
 ) -> None:
     """Rewrite ONLY the touched buckets. Untouched bucket dirs (the
-    other N−|touched|) are never opened, listed, or rewritten."""
-    tmp = _write_bucket_tmp(store, index, merged, n_buckets)
-    try:
+    other N−|touched|) are never opened, listed, or rewritten; a
+    touched bucket with no surviving rows is deleted."""
+    path = store.index_path(index)
+    with scratch_dir(path, "merge") as tmp:
+        parts = write_bucket_tmp(merged, tmp, n_buckets)
         for b in touched:
-            _swap_bucket(tmp, store, index, b)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+            swap_dir(path, store.bucket_path(index, b), parts.get(b))
 
 
 def _replace_index_bucketed(
     store: DocumentStore, index: str, merged: DataFrame, n_buckets: int
 ) -> None:
     """Full rewrite into the bucketed layout (migration / first write)."""
-    from chillastic_spark.sources import BUCKET_MARKER
-
-    target = store.index_path(index)
-    tmp = _write_bucket_tmp(store, index, merged, n_buckets)
-    new = target + ".new-" + uuid.uuid4().hex[:8]
-    try:
-        os.makedirs(new)
-        for d in os.listdir(tmp):
-            if d.startswith("__bucket="):
-                b = int(d.split("=", 1)[1])
-                os.rename(
-                    os.path.join(tmp, d),
-                    os.path.join(
-                        new, f"{os.path.basename(store.bucket_path(index, b))}"
-                    ),
-                )
+    path = store.index_path(index)
+    with scratch_dir(path, "new") as new:
+        for b, part in write_bucket_tmp(merged, new, n_buckets).items():
+            bucket_dir = os.path.basename(store.bucket_path(index, b))
+            os.rename(part, os.path.join(new, bucket_dir))
         # marker rides the swap: the new dir is born bucketed, so no
         # crash window exists where bucket dirs are visible under a
         # "flat" index
         with open(os.path.join(new, BUCKET_MARKER), "w") as f:
             f.write(str(n_buckets))
-    except BaseException:
-        # an exception mid-loop (ENOSPC, a corrupt partition dir name)
-        # must not strand the half-built .new- dir forever — no
-        # recovery path touches pre-swap scratch, and scratch-filtered
-        # listings make the leaked bytes invisible
-        shutil.rmtree(new, ignore_errors=True)
-        raise
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    from chillastic_spark.sources import store_swap_window
-
-    old = target + ".old-" + uuid.uuid4().hex[:8]
-    with store_swap_window(target):
-        if os.path.exists(target):
-            os.rename(target, old)
-        os.rename(new, target)
-        if os.path.exists(old):
-            shutil.rmtree(old)
-
-
-def _replace_index_type_partitioned(
-    store: DocumentStore, index: str, merged: DataFrame
-) -> None:
-    """Merge-rewrite an index ALREADY laid out with Hive ``_type=``
-    partitions, preserving that layout (same tail-swap shape as the
-    bucketed replace, so _recover_interrupted_swap owns the crash
-    windows)."""
-    target = store.index_path(index)
-    new = target + ".new-" + uuid.uuid4().hex[:8]
-    try:
-        merged.write.partitionBy("_type").parquet(new)
-    except BaseException:
-        shutil.rmtree(new, ignore_errors=True)
-        raise
-    from chillastic_spark.sources import store_swap_window
-
-    old = target + ".old-" + uuid.uuid4().hex[:8]
-    with store_swap_window(target):
-        os.rename(target, old)
-        os.rename(new, target)
-        shutil.rmtree(old)
+        swap_dir(path, path, new)
 
 
 def purge(
@@ -367,27 +247,9 @@ def purge(
     # convention) — and a NULL bucket hash would crash the touched-
     # bucket sort below, so drop them before planning
     victims = id_df.filter(F.col("_id").isNotNull()).distinct()
-    with _index_lock(store.index_path(index)), FileLock(
-        store.index_path(index) + ".lock"
-    ):
-        from chillastic_spark.sources import store_swap_window
-        from chillastic_spark.sources.maintenance import (
-            _recover_interrupted_swap,
-            recover_bucket_swaps,
-        )
-
-        with store_swap_window(store.index_path(index)):
-            _recover_interrupted_swap(store.index_path(index))
-            recover_bucket_swaps(store.index_path(index))
+    with store_mutation(store.index_path(index)):
         nb = store.bucket_count(index)
-        buckets = None
-        if nb is not None:
-            buckets = sorted(
-                r["b"]
-                for r in victims.select(bucket_expr(nb).alias("b"))
-                .distinct()
-                .collect()
-            )
+        buckets = None if nb is None else _touched_buckets(victims, nb)
         existing = store.read(spark, index, buckets=buckets)
         if type is not None:
             match = existing.filter(F.col("_type") == type).join(victims, "_id", "semi")
@@ -410,24 +272,15 @@ def purge(
 
 
 def _atomic_replace(store: DocumentStore, index: str, merged: DataFrame) -> None:
-    """Whole-dir swap for a FLAT index (purge on never-upserted data).
-    A Hive ``_type=`` layout is preserved (the same detection
-    compaction uses) — rewriting it flat would silently destroy the
-    partition pruning every per-type read depends on."""
-    from chillastic_spark.sources.maintenance import _is_type_partitioned
-
-    target = store.index_path(index)
-    tmp = target + ".tmp-" + uuid.uuid4().hex[:8]
+    """Whole-dir swap for a FLAT index (purge on never-upserted data,
+    upsert into a type-partitioned one). A Hive ``_type=`` layout is
+    preserved (the same detection compaction uses) — rewriting it flat
+    would silently destroy the partition pruning every per-type read
+    depends on."""
+    path = store.index_path(index)
     writer = merged.write.mode("overwrite")
-    if os.path.isdir(target) and _is_type_partitioned(target):
+    if os.path.isdir(path) and _is_type_partitioned(path):
         writer = writer.partitionBy("_type")
-    writer.parquet(tmp)
-    from chillastic_spark.sources import store_swap_window
-
-    old = target + ".old-" + uuid.uuid4().hex[:8]
-    with store_swap_window(target):
-        if os.path.exists(target):
-            os.rename(target, old)
-        os.rename(tmp, target)
-        if os.path.exists(old):
-            shutil.rmtree(old)
+    with scratch_dir(path, "tmp") as tmp:
+        writer.parquet(tmp)
+        swap_dir(path, path, tmp)

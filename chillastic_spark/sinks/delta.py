@@ -30,6 +30,7 @@ from typing import Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from chillastic_spark.sinks import dedup_within_batch
 from chillastic_spark.sources import N_BUCKETS_DEFAULT, bucket_expr
 
 # null-safe on EVERY key part: a NULL _id (or _index) row must match
@@ -203,23 +204,12 @@ class DeltaStore:
         session can truly interleave."""
         import uuid
 
-        from pyspark.sql.window import Window
-
         self.ensure_table(spark)
         from chillastic_spark.persist import materialize, release
 
         pinned = materialize(add_bucket_column(df, self.n_buckets))
         try:
-            w_rank = F.row_number().over(
-                Window.partitionBy("_index", "_type", "_id").orderBy(
-                    F.desc(F.md5(F.col("_source"))), F.desc("_size")
-                )
-            )
-            batch = (
-                pinned.withColumn("__rk", w_rank)
-                .filter(F.col("__rk") == 1)
-                .drop("__rk")
-            )
+            batch = dedup_within_batch(pinned)
             n = batch.count()
             view = f"__batch_{uuid.uuid4().hex}"
             batch.createOrReplaceTempView(view)

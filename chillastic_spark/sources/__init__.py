@@ -25,6 +25,29 @@ an unusable streaming sink at 100 TB (the ES analog routes on _id the
 same way; Delta/Iceberg MERGE gets this from partition pruning on a
 bucket column). N is pinned per index in ``.n_buckets`` because the
 merge anti-join is only correct when both sides agree on the hash.
+
+**Rewrite protocol.** Plain parquet has no transaction log, so every
+writer that changes an index — ``sinks.upsert`` and ``sinks.purge``,
+:meth:`DocumentStore.write_documents`, ``maintenance.compact_index``
+and the read path's self-heal — follows the same four steps, all
+defined here:
+
+1. :func:`store_mutation` takes the index's writer locks: an
+   in-process re-entrant lock plus an exclusive flock on
+   ``<index>.lock``, so one writer at a time changes an index, across
+   threads and processes (on Delta/Iceberg, MERGE transactions replace
+   both);
+2. inside them it heals crashed swaps at BOTH levels, the index dir and
+   each bucket dir: a live dir missing beside its ``.old-`` snapshot is
+   restored from the newest snapshot, superseded snapshots are removed;
+3. the writer writes its new data to a tagged scratch dir
+   (:func:`scratch_dir`), so a crash mid-write leaves the index as it
+   was;
+4. :func:`swap_dir` installs the new dir with two renames (live →
+   ``.old-``, new → live) under :func:`store_swap_window`, the narrow
+   lock readers take SHARED, then removes the snapshot. A crash between
+   the renames leaves only the snapshot, which step 2 of the next
+   writer, or the next read, restores.
 """
 from __future__ import annotations
 
@@ -33,11 +56,16 @@ import fnmatch
 import json
 import os
 import re
+import shutil
+import threading
+import uuid
 from typing import Any, Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from chillastic_spark.locks import FileLock, held_exclusive, test_pause
 
 ENVELOPE_SCHEMA = T.StructType(
     [
@@ -53,41 +81,185 @@ ENVELOPE_SCHEMA = T.StructType(
 NON_PORTABLE_SETTINGS = ("uuid", "creation_date", "provided_name")
 
 # hash-bucketed index layout (see module docstring)
-N_BUCKETS_DEFAULT = int(os.environ.get("CHILLASTIC_STORE_BUCKETS", "32"))
 BUCKET_PREFIX = "bucket-"
 BUCKET_MARKER = ".n_buckets"
 
 
+def _env_bucket_count() -> int:
+    """``CHILLASTIC_STORE_BUCKETS`` (default 32), checked against the
+    same [1, 9999] range as ``set_bucket_count``: bucket dirs are
+    ``bucket-NNNN``, and N=0 would make every bucket hash NULL."""
+    raw = os.environ.get("CHILLASTIC_STORE_BUCKETS", "32")
+    try:
+        n = int(raw)
+    except ValueError:
+        n = 0
+    if not 0 < n <= 9999:
+        raise ValueError(
+            f"CHILLASTIC_STORE_BUCKETS must be an integer in [1, 9999] "
+            f"(got {raw!r})"
+        )
+    return n
+
+
+N_BUCKETS_DEFAULT = _env_bucket_count()
+
+
+# --------------------------------- rewrite protocol (see module docstring)
+# in-process side of the writer lock, re-entrant because the read path
+# can heal while its own thread's upsert holds the lock
+_INDEX_LOCKS: dict[str, threading.RLock] = {}
+_INDEX_LOCKS_GUARD = threading.Lock()
+
+
 @contextlib.contextmanager
-def store_swap_window(index_path: str):
-    """EXCLUSIVE flock on ``<index>.swap.lock`` held ONLY around a live
-    directory-rename window — the store twin of the search/vector
-    index swap protocol (r10; r9 verdict #4 applied to the store).
-
-    The long per-index mutation lock (``<index>.lock``) still
-    serializes whole mutations against each other; this second, narrow
-    lock exists for READERS: ``DocumentStore.read`` takes it SHARED
-    around its existence check + file listing, so a read can never
-    land between a swap's two renames (where it used to see the live
-    dir missing and silently serve an EMPTY or bucket-incomplete
-    frame) — and a reader blocks a writer only for the microseconds of
-    a rename, never for the minutes of the rewrite that precedes it.
-    Bucket-level swaps take the INDEX-level lock so one reader guard
-    covers both layouts. Re-entrant per thread via
-    ``locks.held_exclusive`` (recovery runs inside callers that
-    already hold the window)."""
-    from chillastic_spark.locks import FileLock, held_exclusive
-
-    lock_path = index_path + ".swap.lock"
+def _flock(lock_path: str, shared: bool = False):
+    """flock on ``lock_path``, skipped when the calling thread already
+    holds it exclusively: flock treats two fds of one process as
+    independent holders, so re-acquiring would self-deadlock."""
     if held_exclusive(lock_path):
         yield
         return
-    lk = FileLock(lock_path)
-    lk.acquire()
-    try:
+    with FileLock(lock_path, shared=shared):
         yield
+
+
+def store_swap_window(index_path: str):
+    """EXCLUSIVE flock on ``<index>.swap.lock`` held ONLY around a live
+    directory-rename window — the store twin of the search/vector
+    index swap protocol.
+
+    The writer lock of :func:`store_mutation` serializes whole
+    mutations against each other; this second, narrow lock exists for
+    READERS: ``DocumentStore.read`` takes it SHARED around its
+    existence check + file listing, so a read never lands between a
+    swap's two renames, and a reader blocks a writer only for the
+    microseconds of a rename, never for the rewrite that precedes it.
+    Bucket-level swaps take the INDEX-level lock so one reader guard
+    covers both layouts. Re-entrant per thread."""
+    return _flock(index_path + ".swap.lock")
+
+
+@contextlib.contextmanager
+def store_mutation(index_path: str):
+    """Steps 1-2 of the rewrite protocol: hold the index's writer locks
+    for the block, with crashed swaps at both levels healed first.
+    Re-entrant per thread."""
+    with _INDEX_LOCKS_GUARD:
+        lock = _INDEX_LOCKS.setdefault(
+            os.path.abspath(index_path), threading.RLock()
+        )
+    with lock, _flock(index_path + ".lock"):
+        with store_swap_window(index_path):
+            _recover_interrupted_swap(index_path)
+            recover_bucket_swaps(index_path)
+        yield
+
+
+@contextlib.contextmanager
+def scratch_dir(path: str, tag: str):
+    """Step 3: a fresh ``<path>.<tag>-<hex>`` dir name (``tag`` is one of
+    ``DocumentStore._SCRATCH_RE``'s, so listings and streams skip it),
+    removed on exit — after :func:`swap_dir` installed it, it is gone
+    already."""
+    tmp = f"{path}.{tag}-{uuid.uuid4().hex[:8]}"
+    try:
+        yield tmp
     finally:
-        lk.release()
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
+def write_bucket_tmp(df: DataFrame, tmp: str, n_buckets: int) -> dict[int, str]:
+    """Write ``df`` to ``tmp`` partitioned by hash bucket; returns the
+    dir of every bucket that got rows."""
+    df.withColumn("__bucket", bucket_expr(n_buckets)).write.partitionBy(
+        "__bucket"
+    ).parquet(tmp)
+    return {
+        int(d.split("=", 1)[1]): os.path.join(tmp, d)
+        for d in os.listdir(tmp)
+        if d.startswith("__bucket=")
+    }
+
+
+def swap_dir(index_path: str, live: str, new: Optional[str]) -> None:
+    """Step 4: install ``new`` as ``live`` (the index dir or one of its
+    bucket dirs) with two renames under the index's swap window.
+    ``new=None`` deletes ``live``: an absent bucket is an empty one."""
+    old = f"{live}.old-{uuid.uuid4().hex[:8]}"
+    with store_swap_window(index_path):
+        if os.path.exists(live):
+            os.rename(live, old)
+        # torture-test crash window: live dir renamed away, new dir not
+        # yet installed (tests/test_store_reader_race.py)
+        test_pause("store_mid_swap", os.path.dirname(index_path))
+        if new is not None:
+            os.rename(new, live)
+        if os.path.exists(old):
+            shutil.rmtree(old)
+
+
+def _recover_interrupted_swap(path: str) -> None:
+    """Heal the two-rename swap's crash window at ``path``. ``.old-``
+    siblings exist only because a swap crashed, and the live dir tells
+    us WHICH window it died in:
+
+    * live path missing → it died between ``rename(live, old)`` and
+      ``rename(new, live)``: the NEWEST ``.old-`` (by mtime — the
+      suffixes are random hex, not ordered) holds the current data;
+      restore it. Any older leftovers are from earlier crashes and are
+      superseded — remove them so a later crash can never resurrect a
+      stale snapshot.
+    * live path present → it died after ``rename(new, live)`` but
+      before ``rmtree(old)``: every ``.old-`` is a superseded snapshot;
+      remove them all.
+
+    The interrupted rewrite's scratch dir is left for inspection;
+    rerunning the writer redoes it."""
+    base = os.path.basename(path)
+    parent = os.path.dirname(path) or "."
+    if not os.path.isdir(parent):
+        return
+    olds = [
+        os.path.join(parent, d)
+        for d in os.listdir(parent)
+        if d.startswith(base + ".old-")
+    ]
+    if not olds:
+        return
+    olds.sort(key=lambda p: os.path.getmtime(p))
+    if not os.path.exists(path):
+        os.rename(olds.pop(), path)
+    for stale in olds:
+        shutil.rmtree(stale)
+
+
+def recover_bucket_swaps(root: str) -> None:
+    """Heal interrupted dir swaps under an index root (step 2 of the
+    rewrite protocol), keyed off the ``.old-`` LEFTOVERS themselves:
+    ``bucket_paths`` only lists existing dirs, so a bucket whose live
+    dir vanished mid-swap would otherwise never be handed to recovery
+    and its documents would stay invisible forever."""
+    if os.path.isdir(root):
+        for d in os.listdir(root):
+            if ".old-" in d:
+                _recover_interrupted_swap(
+                    os.path.join(root, d.split(".old-", 1)[0])
+                )
+
+
+def _swap_crashed(index_path: str) -> bool:
+    """True when a swap died between its two renames: a ``.old-``
+    snapshot whose live dir is missing, beside the index dir or inside
+    it (a bucket)."""
+    parent, base = os.path.split(index_path)
+    if not os.path.isdir(index_path):
+        return any(d.startswith(base + ".old-") for d in os.listdir(parent))
+    return any(
+        ".old-" in d
+        and not os.path.exists(os.path.join(index_path, d.split(".old-", 1)[0]))
+        for d in os.listdir(index_path)
+    )
 
 
 def bucket_expr(n_buckets: int) -> F.Column:
@@ -214,8 +386,6 @@ class DocumentStore:
         write: two concurrent put_indices used to last-writer-win and
         silently drop each other's entries (the data layer serializes
         via per-index locks; the catalog needs the same)."""
-        from chillastic_spark.locks import FileLock
-
         return FileLock(self._catalog_path(which) + ".lock")
 
     def put_indices(self, indices: list[dict]) -> None:
@@ -405,12 +575,13 @@ class DocumentStore:
         the MERGE fast path reads only the touched 1/N-th of the index.
 
         The existence check + file listing run under the SHARED side
-        of :func:`store_swap_window` (r10): a read can no longer land
-        between a live swap's two renames and silently serve an empty
-        or bucket-incomplete frame. A dir missing UNDER the lock with
-        ``.old-``/``.compact-`` siblings is a crashed swap — healed
-        once (``_recover_interrupted_swap``) and retried, so a reader
-        is never the caller that has to know about compactor crashes.
+        of :func:`store_swap_window`: a read never lands between a live
+        swap's two renames, so it never serves an empty or
+        bucket-incomplete frame. A swap found crashed UNDER the lock (a
+        ``.old-`` snapshot whose live index or bucket dir is missing)
+        is healed once through :func:`store_mutation` and the listing
+        retried, so a reader is never the caller that has to know about
+        writer crashes.
         """
         path = self.index_path(index)
         if not os.path.isdir(os.path.dirname(path)):
@@ -418,7 +589,7 @@ class DocumentStore:
             return spark.createDataFrame([], ENVELOPE_SCHEMA)
         if (
             not os.path.isdir(path)
-            and not self._swap_leftovers(index)
+            and not _swap_crashed(path)
             and not os.path.exists(path + ".swap.lock")
         ):
             # genuinely never-built: no dir, no crashed-swap leftovers,
@@ -427,23 +598,20 @@ class DocumentStore:
             # visible) — return empty without materializing a lock file
             return spark.createDataFrame([], ENVELOPE_SCHEMA)
         df = None
-        for attempt in (0, 1):
-            with self._read_snapshot(index):
-                if os.path.isdir(path):
-                    if self.bucket_count(index) is not None:
-                        paths = self.bucket_paths(index, buckets)
-                        if not paths:
-                            return spark.createDataFrame([], ENVELOPE_SCHEMA)
-                        df = spark.read.schema(ENVELOPE_SCHEMA).parquet(*paths)
-                    else:
-                        df = spark.read.schema(ENVELOPE_SCHEMA).parquet(path)
+        for healed in (False, True):
+            with _flock(path + ".swap.lock", shared=True):
+                if healed or not _swap_crashed(path):
+                    if os.path.isdir(path):
+                        paths = (
+                            self.bucket_paths(index, buckets)
+                            if self.bucket_count(index) is not None
+                            else [path]
+                        )
+                        if paths:
+                            df = spark.read.schema(ENVELOPE_SCHEMA).parquet(*paths)
                     break
-            # absent under the lock: genuinely unbuilt, or a crashed
-            # swap whose leftovers hold the data — heal once, retry
-            if attempt == 0 and self._swap_leftovers(index):
-                self._heal_interrupted_swap(index)
-                continue
-            return spark.createDataFrame([], ENVELOPE_SCHEMA)
+            with store_mutation(path):  # entering it heals both levels
+                pass
         if df is None:
             return spark.createDataFrame([], ENVELOPE_SCHEMA)
         df = df.withColumn("_index", F.lit(index))
@@ -458,51 +626,6 @@ class DocumentStore:
                 in_range = in_range | F.col("_size").isNull()
             df = df.filter(in_range)
         return df
-
-    @contextlib.contextmanager
-    def _read_snapshot(self, index: str):
-        """SHARED flock on the index's ``.swap.lock`` (see
-        :func:`store_swap_window`) — skipped when the calling thread
-        already holds it exclusively (a recovery mid-swap reading its
-        own work would self-deadlock: flock treats two fds of one
-        process as independent holders)."""
-        from chillastic_spark.locks import FileLock, held_exclusive
-
-        lock_path = self.index_path(index) + ".swap.lock"
-        if held_exclusive(lock_path):
-            yield
-            return
-        lk = FileLock(lock_path, shared=True)
-        lk.acquire()
-        try:
-            yield
-        finally:
-            lk.release()
-
-    def _swap_leftovers(self, index: str) -> bool:
-        """True when ``.old-``/``.compact-`` siblings of the index dir
-        exist — the signature of a compaction that died mid-swap."""
-        base = os.path.basename(self.index_path(index))
-        parent = os.path.dirname(self.index_path(index))
-        if not os.path.isdir(parent):
-            return False
-        return any(
-            d.startswith(base + ".old-") or d.startswith(base + ".compact-")
-            for d in os.listdir(parent)
-        )
-
-    def _heal_interrupted_swap(self, index: str) -> None:
-        """Roll a crashed flat-index swap back to its ``.old-``
-        snapshot (``maintenance._recover_interrupted_swap``) under the
-        full writer locks — the read path's self-service recovery."""
-        from chillastic_spark.locks import FileLock
-        from chillastic_spark.sources.maintenance import (
-            _recover_interrupted_swap,
-        )
-
-        path = self.index_path(index)
-        with FileLock(path + ".lock"), store_swap_window(path):
-            _recover_interrupted_swap(path)
 
     def read_sizes(
         self, spark: SparkSession, index: str, type: Optional[str] = None
@@ -533,9 +656,8 @@ class DocumentStore:
         overwriting one drops the bucket marker and returns the index
         to the flat layout the caller asked for.
 
-        EVERY path (flat included) takes the same per-index locks as
-        upsert/purge/compaction and heals interrupted swaps first: an
-        unlocked flat write raced the merge's flat->bucketed migration
+        EVERY path (flat included) runs inside :func:`store_mutation`:
+        an unlocked flat write raced the merge's flat->bucketed migration
         (rows landing in a dir about to be renamed away and rmtree'd),
         and an un-healed bucketed append re-created a live bucket dir
         whose only complete copy sat in .old- — the next heal would
@@ -545,18 +667,7 @@ class DocumentStore:
             "_index", "_type", "_id", "_source",
             *( ["_size"] if "_size" in df.columns else [F.lit(None).cast("long").alias("_size")]),
         ]
-        from chillastic_spark.locks import FileLock
-        from chillastic_spark.sinks import _index_lock
-        from chillastic_spark.sources.maintenance import (
-            _recover_interrupted_swap,
-            recover_bucket_swaps,
-        )
-
-        with _index_lock(self.index_path(index)), FileLock(
-            self.index_path(index) + ".lock"
-        ):
-            _recover_interrupted_swap(self.index_path(index))
-            recover_bucket_swaps(self.index_path(index))
+        with store_mutation(self.index_path(index)):
             # the layout can flip flat->bucketed while waiting on the
             # lock (upsert migration) — read the marker INSIDE it
             nb = self.bucket_count(index)
@@ -576,27 +687,15 @@ class DocumentStore:
 
     def _append_bucketed(self, df: DataFrame, index: str, n_buckets: int) -> None:
         """Append rows into their hash buckets: one partitioned write
-        to a temp dir, then move the (uniquely-named) part files into
+        to a scratch dir, then move the (uniquely-named) part files into
         the live bucket dirs — no existing file is rewritten."""
-        import shutil
-        import uuid as _uuid
-
-        tmp = self.index_path(index) + ".append-" + _uuid.uuid4().hex[:8]
-        df.withColumn("__bucket", bucket_expr(n_buckets)).write.partitionBy(
-            "__bucket"
-        ).parquet(tmp)
-        try:
-            for d in os.listdir(tmp):
-                if not d.startswith("__bucket="):
-                    continue
-                b = int(d.split("=", 1)[1])
+        with scratch_dir(self.index_path(index), "append") as tmp:
+            for b, part in write_bucket_tmp(df, tmp, n_buckets).items():
                 dest = self.bucket_path(index, b)
                 os.makedirs(dest, exist_ok=True)
-                for f in os.listdir(os.path.join(tmp, d)):
+                for f in os.listdir(part):
                     if f.endswith(".parquet"):
-                        os.rename(os.path.join(tmp, d, f), os.path.join(dest, f))
-        finally:
-            shutil.rmtree(tmp, ignore_errors=True)
+                        os.rename(os.path.join(part, f), os.path.join(dest, f))
 
     def count(self, spark: SparkSession, index: str, type: Optional[str] = None,
               min_size: float = -1, max_size: float = -1) -> int:

@@ -7,7 +7,9 @@ byte count, becomes the scan bottleneck: each file costs a footer read,
 a task, and a scheduler round-trip. Periodic compaction to
 ~128 MB files keeps scans planable (one task per ~1 row-group) and is
 what Delta/Iceberg OPTIMIZE does; on plain parquet we implement it as
-repartition-to-size + atomic directory swap.
+repartition-to-size + atomic directory swap, following the store's
+rewrite protocol (locks, heal, scratch write, two-rename swap), defined
+once in :mod:`chillastic_spark.sources`.
 
 Compaction preserves a Hive ``_type=...`` layout so the partition
 pruning the store's per-type reads rely on (SURVEY P4) survives.
@@ -16,12 +18,17 @@ from __future__ import annotations
 
 import math
 import os
-import shutil
-import uuid
 
 from pyspark.sql import SparkSession
 
-from chillastic_spark.sources import ENVELOPE_SCHEMA, DocumentStore
+from chillastic_spark.sources import (  # noqa: F401 (heal helper re-exported)
+    ENVELOPE_SCHEMA,
+    DocumentStore,
+    _recover_interrupted_swap,
+    scratch_dir,
+    store_mutation,
+    swap_dir,
+)
 
 DEFAULT_TARGET_FILE_BYTES = 128 * 1024 * 1024
 _ENVELOPE_COLS = [f.name for f in ENVELOPE_SCHEMA.fields]
@@ -104,195 +111,71 @@ def compact_index(
     MERGE invariant survives OPTIMIZE, exactly as Delta compaction
     respects table partitioning.
 
-    Compaction takes the SAME per-index locks as upsert/purge: a
-    rewrite racing a concurrent merge would otherwise rename stale
+    Compaction runs inside the SAME ``store_mutation`` as upsert/purge:
+    a rewrite racing a concurrent merge would otherwise rename stale
     compacted data over the batch the merge just landed.
     """
-    from chillastic_spark.locks import FileLock
-    from chillastic_spark.sinks import _index_lock
-
-    with _index_lock(store.index_path(index)), FileLock(
-        store.index_path(index) + ".lock"
-    ):
-        return _compact_index_locked(
-            spark, store, index, target_file_bytes, min_files_to_compact,
-            sort_by, zorder_by,
-        )
-
-
-def _compact_index_locked(
-    spark: SparkSession,
-    store: DocumentStore,
-    index: str,
-    target_file_bytes: int = DEFAULT_TARGET_FILE_BYTES,
-    min_files_to_compact: int = 2,
-    sort_by: "list[str] | None" = None,
-    zorder_by: "list[str] | None" = None,
-) -> dict:
-    if store.bucket_count(index) is not None:
-        return _compact_bucketed(
-            spark, store, index, target_file_bytes, min_files_to_compact,
-            sort_by, zorder_by,
-        )
-    from chillastic_spark.sources import store_swap_window
-
     path = store.index_path(index)
-    with store_swap_window(path):
-        _recover_interrupted_swap(path)
-    before = file_stats(path, small_file_bytes=target_file_bytes // 4)
+    with store_mutation(path):
+        bucketed = store.bucket_count(index) is not None
+        runs = [
+            _compact_dir(
+                spark, path, d, target_file_bytes, min_files_to_compact,
+                sort_by, zorder_by,
+            )
+            for d in (store.bucket_paths(index) if bucketed else [path])
+        ]
+    return {
+        "before": _sum_stats([r[0] for r in runs]),
+        "after": _sum_stats([r[1] for r in runs]),
+        "compacted": any(r[2] for r in runs),
+    }
+
+
+def _sum_stats(stats: "list[dict]") -> dict:
+    out = {k: sum(s[k] for s in stats) for k in ("n_files", "total_bytes", "small_files")}
+    out["avg_file_bytes"] = out["total_bytes"] // out["n_files"] if out["n_files"] else 0
+    return out
+
+
+def _compact_dir(
+    spark: SparkSession,
+    index_path: str,
+    d: str,
+    target_file_bytes: int,
+    min_files_to_compact: int,
+    sort_by: "list[str] | None",
+    zorder_by: "list[str] | None",
+) -> "tuple[dict, dict, bool]":
+    """Compact ONE parquet dir — a flat index, or one bucket of a
+    bucketed index — on its own file stats; returns (before, after,
+    compacted)."""
+    from pyspark.sql import functions as F
+
+    before = file_stats(d, small_file_bytes=target_file_bytes // 4)
     n_out = max(1, math.ceil(before["total_bytes"] / target_file_bytes))
     relayout = sort_by is not None or zorder_by is not None
-    if not relayout and before["n_files"] <= max(n_out, min_files_to_compact - 1):
-        return {"before": before, "after": before, "compacted": False}
-    if before["n_files"] == 0:  # empty or absent index: relayout no-ops
-        return {"before": before, "after": before, "compacted": False}
-
-    partitioned = _is_type_partitioned(path)
-    df = spark.read.parquet(path).select(*[c for c in _ENVELOPE_COLS])
-    tmp = path + ".compact-" + uuid.uuid4().hex[:8]
+    if before["n_files"] == 0 or (
+        not relayout and before["n_files"] <= max(n_out, min_files_to_compact - 1)
+    ):
+        return before, before, False
+    df = spark.read.parquet(d).select(*_ENVELOPE_COLS)
     if zorder_by:
         shaped = zorder_layout(df, zorder_by, n_out)
     elif sort_by:
-        from pyspark.sql import functions as F
-
         shaped = df.repartitionByRange(n_out, *[F.col(c) for c in sort_by])
         shaped = shaped.sortWithinPartitions(*sort_by)
     else:
         shaped = df.repartition(n_out)
     writer = shaped.write.mode("overwrite")
-    if partitioned:
+    if _is_type_partitioned(d):
         # one task writes at most one file per type ⇒ ≤ n_out files
         # per partition, and the pruned layout survives
         writer = writer.partitionBy("_type")
-    writer.parquet(tmp)
-
-    old = path + ".old-" + uuid.uuid4().hex[:8]
-    # rename window under the index's swap lock (r10): readers hold the
-    # SHARED side during their listing, so a read either sees the whole
-    # pre-compaction dir or the whole post-compaction one — never the
-    # between-renames gap it used to misread as an empty index
-    with store_swap_window(path):
-        os.rename(path, old)
-        # torture-test crash window: live dir renamed away, compacted
-        # dir not yet installed (tests/test_store_reader_race.py)
-        from chillastic_spark.locks import test_pause
-
-        test_pause("store_mid_swap", os.path.dirname(path))
-        os.rename(tmp, path)
-        shutil.rmtree(old)
-    return {
-        "before": before,
-        "after": file_stats(path, small_file_bytes=target_file_bytes // 4),
-        "compacted": True,
-    }
-
-
-def _recover_interrupted_swap(path: str) -> None:
-    """Heal the two-rename swap's crash window. ``.old-`` siblings can
-    only exist because a compaction crashed, and the live dir tells us
-    WHICH window it died in:
-
-    * live path missing → it died between ``rename(path, old)`` and
-      ``rename(tmp, path)``: the NEWEST ``.old-`` (by mtime — the
-      suffixes are random hex, not ordered) holds the current data;
-      restore it. Any older leftovers are from earlier crashes and are
-      superseded — remove them so a later crash can never resurrect a
-      stale snapshot.
-    * live path present → it died after ``rename(tmp, path)`` but
-      before ``rmtree(old)``: every ``.old-`` is a superseded snapshot;
-      remove them all.
-
-    The interrupted rewrite's ``.compact-`` tmp dir is left for
-    inspection; rerunning compaction redoes it."""
-    base = os.path.basename(path)
-    parent = os.path.dirname(path) or "."
-    if not os.path.isdir(parent):
-        return
-    olds = [
-        os.path.join(parent, d)
-        for d in os.listdir(parent)
-        if d.startswith(base + ".old-")
-    ]
-    if not olds:
-        return
-    olds.sort(key=lambda p: os.path.getmtime(p))
-    if not os.path.exists(path):
-        os.rename(olds.pop(), path)
-    for stale in olds:
-        shutil.rmtree(stale)
-
-
-def recover_bucket_swaps(root: str) -> None:
-    """Heal interrupted dir swaps under an index root, keyed off the
-    ``.old-`` LEFTOVERS themselves: ``bucket_paths`` only lists
-    existing dirs, so a bucket whose live dir vanished mid-swap would
-    otherwise never be handed to recovery and its documents would stay
-    invisible forever. Shared by compaction and the upsert sink (both
-    perform the same two-rename swap)."""
-    if os.path.isdir(root):
-        for d in os.listdir(root):
-            if ".old-" in d:
-                _recover_interrupted_swap(
-                    os.path.join(root, d.split(".old-", 1)[0])
-                )
-
-
-def _compact_bucketed(
-    spark: SparkSession,
-    store: DocumentStore,
-    index: str,
-    target_file_bytes: int,
-    min_files_to_compact: int,
-    sort_by: "list[str] | None",
-    zorder_by: "list[str] | None",
-) -> dict:
-    """Per-bucket compaction: each bucket dir is its own little parquet
-    dataset and is rewritten (or skipped) on its own file stats."""
-    from pyspark.sql import functions as F
-
-    agg_before: dict = {"n_files": 0, "total_bytes": 0, "small_files": 0}
-    agg_after: dict = {"n_files": 0, "total_bytes": 0, "small_files": 0}
-    from chillastic_spark.sources import store_swap_window
-
-    compacted_any = False
-    with store_swap_window(store.index_path(index)):
-        recover_bucket_swaps(store.index_path(index))
-    for bpath in store.bucket_paths(index):
-        before = file_stats(bpath, small_file_bytes=target_file_bytes // 4)
-        n_out = max(1, math.ceil(before["total_bytes"] / target_file_bytes))
-        relayout = sort_by is not None or zorder_by is not None
-        skip = not relayout and before["n_files"] <= max(
-            n_out, min_files_to_compact - 1
-        )
-        after = before
-        if not skip and before["n_files"] > 0:
-            df = spark.read.parquet(bpath).select(*_ENVELOPE_COLS)
-            if zorder_by:
-                shaped = zorder_layout(df, zorder_by, n_out)
-            elif sort_by:
-                shaped = df.repartitionByRange(n_out, *[F.col(c) for c in sort_by])
-                shaped = shaped.sortWithinPartitions(*sort_by)
-            else:
-                shaped = df.repartition(n_out)
-            tmp = bpath + ".compact-" + uuid.uuid4().hex[:8]
-            shaped.write.mode("overwrite").parquet(tmp)
-            old = bpath + ".old-" + uuid.uuid4().hex[:8]
-            # per-bucket rename window on the INDEX-level swap lock —
-            # readers guard at index granularity (store._read_snapshot)
-            with store_swap_window(store.index_path(index)):
-                os.rename(bpath, old)
-                os.rename(tmp, bpath)
-                shutil.rmtree(old)
-            compacted_any = True
-            after = file_stats(bpath, small_file_bytes=target_file_bytes // 4)
-        for k in agg_before:
-            agg_before[k] += before[k]
-            agg_after[k] += after[k]
-    for agg in (agg_before, agg_after):
-        agg["avg_file_bytes"] = (
-            agg["total_bytes"] // agg["n_files"] if agg["n_files"] else 0
-        )
-    return {"before": agg_before, "after": agg_after, "compacted": compacted_any}
+    with scratch_dir(d, "compact") as tmp:
+        writer.parquet(tmp)
+        swap_dir(index_path, d, tmp)
+    return before, file_stats(d, small_file_bytes=target_file_bytes // 4), True
 
 
 def compact_store(

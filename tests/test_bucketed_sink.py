@@ -4,7 +4,9 @@ O(|index|) per batch). Proven at the filesystem level: untouched bucket
 dirs keep the same inodes and mtimes across a merge."""
 import json
 import os
+import uuid
 
+import pytest
 from pyspark.sql import functions as F
 
 from chillastic_spark.sinks import purge, upsert
@@ -237,7 +239,47 @@ def test_upsert_heals_interrupted_bucket_swap(spark, tmp_path):
     upsert(spark, store, _corpus(spark, 100), n_buckets=N_BUCKETS)
     victim = store.bucket_paths("ix")[0]
     os.rename(victim, victim + ".old-crashed1")
-    assert store.read(spark, "ix").count() < 100  # the crash window
+    assert not os.path.isdir(victim)  # the crash window
     # next delivery heals first, then merges — nothing lost
     upsert(spark, store, _batch(spark, [("docNEW", 1)]), n_buckets=N_BUCKETS)
     assert store.read(spark, "ix").count() == 101
+
+
+def _upsert_jobs(spark, store, df, **kw) -> int:
+    """Spark jobs one upsert launches: statusTracker ids under a job
+    group set for the call alone."""
+    sc = spark.sparkContext
+    group = "upsert-budget-" + uuid.uuid4().hex
+    sc.setJobGroup(group, "upsert job budget")
+    try:
+        upsert(spark, store, df, **kw)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_migrating_upsert_job_budget(spark, tmp_path):
+    """The batch facts (destination indices, NULL-_id check, delivered
+    count) come from ONE grouped action, not three."""
+    store = DocumentStore(str(tmp_path / "s"))
+    assert _upsert_jobs(spark, store, _corpus(spark, 50), n_buckets=N_BUCKETS) <= 6
+
+
+def test_bucketed_upsert_job_budget(spark, tmp_path):
+    store = DocumentStore(str(tmp_path / "s"))
+    upsert(spark, store, _corpus(spark, 50), n_buckets=N_BUCKETS)
+    batch = _batch(spark, [("doc1", 7), ("docNEW", 1)])
+    assert _upsert_jobs(spark, store, batch) <= 8
+    assert store.read(spark, "ix").count() == 51
+
+
+@pytest.mark.parametrize("raw", ["abc", "", "3.5", "0", "-4", "10000"])
+def test_malformed_store_buckets_env_is_rejected(monkeypatch, raw):
+    from chillastic_spark.sources import _env_bucket_count
+
+    monkeypatch.setenv("CHILLASTIC_STORE_BUCKETS", raw)
+    with pytest.raises(ValueError, match=r"CHILLASTIC_STORE_BUCKETS .*\[1, 9999\]"):
+        _env_bucket_count()
+    monkeypatch.setenv("CHILLASTIC_STORE_BUCKETS", "64")
+    assert _env_bucket_count() == 64

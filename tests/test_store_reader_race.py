@@ -158,6 +158,29 @@ def test_read_heals_crashed_flat_swap_in_process(spark, tmp_path):
     shutil.rmtree(path + ".compact-deadbeef", ignore_errors=True)
 
 
+def test_read_heals_crashed_bucket_swap_in_process(spark, tmp_path):
+    from chillastic_spark.sinks import upsert
+    from chillastic_spark.sources import DocumentStore
+
+    store = DocumentStore(str(tmp_path / "store"))
+    df = spark.range(100).select(
+        F.lit("ix").alias("_index"),
+        F.lit("t").alias("_type"),
+        F.col("id").cast("string").alias("_id"),
+        F.to_json(F.struct(F.col("id").alias("v"))).alias("_source"),
+        F.lit(10).cast("long").alias("_size"),
+    )
+    upsert(spark, store, df, n_buckets=4)
+    # simulate the crash window of one bucket's swap: live bucket dir
+    # renamed away, new one never installed
+    victim = store.bucket_paths("ix")[0]
+    os.rename(victim, victim + ".old-deadbeef")
+    got = store.read(spark, "ix").count()
+    assert got == 100  # healed at read time, not silently incomplete
+    assert os.path.isdir(victim)
+    assert not os.path.exists(victim + ".old-deadbeef")
+
+
 def test_read_absent_index_still_empty_and_creates_nothing(spark, tmp_path):
     from chillastic_spark.sources import DocumentStore
 
