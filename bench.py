@@ -156,6 +156,17 @@ def split_contract_payload(
     if len(line) > budget and "queries_normalized" in out:
         diag["queries_normalized"] = out.pop("queries_normalized")
         diag["stdout_demoted"] = ["queries_normalized"]
+        line = json.dumps(out, separators=(",", ":"))
+    if len(line) > budget:
+        # nothing left to demote: a 2000-char tail capture cuts the
+        # line's front and the round-over-round comparison is lost
+        diag["stdout_overflow"] = {"chars": len(line), "budget": budget}
+        print(
+            f"# WARNING: contract stdout line is {len(line)} chars, over "
+            f"the {budget}-char budget even after demotion — a tail "
+            "capture will truncate it",
+            file=sys.stderr,
+        )
     return out, diag
 
 

@@ -7,20 +7,21 @@ replace existing rows with the same key, unseen keys append.
 
 On parquet (this repo's storage) the merge is BUCKET-SCOPED: every
 index is laid out in N hash buckets of ``_id`` (sources.bucket_expr),
-and a batch rewrites only the buckets containing its keys — read the
-touched 1/N-th, ``existing ⟕anti new ∪ new``, atomic per-bucket dir
-swap. Write amplification is O(|index|·touched/N) per batch instead of
-O(|index|): a 1k-doc micro-batch against a 1 TB index touches ≤1k
-buckets' worth of data, not the whole terabyte. On a real deployment
-the same call maps 1:1 to Delta/Iceberg ``MERGE INTO`` over a
-bucket-partitioned table (transactional, partition-pruned), which is
-the 100 TB path; the dir swap here exists only because plain parquet
-has no transaction log.
+and a batch rewrites only the buckets containing its keys. Their rows
+and the batch meet in ONE exchange hash-partitioned on the bucket,
+where a window per key does the merge (:func:`_merge`) and the same
+task writes the bucket as one file, swapped in per bucket dir — the
+Iceberg "hash distribution" / Delta "optimized write" layout. Write
+amplification is O(|index|·touched/N) per batch instead of O(|index|).
+On a real deployment the same call maps 1:1 to Delta/Iceberg ``MERGE
+INTO`` over a bucket-partitioned table (transactional, partition-
+pruned), which is the 100 TB path; the dir swap here exists only
+because plain parquet has no transaction log.
 
 The first upsert against a flat index migrates it to the bucketed
-layout (one full rewrite, once), mirroring how a Delta conversion works.
-Every rewrite here follows the store's rewrite protocol (locks, heal,
-scratch write, two-rename swap), defined once in
+layout (one full rewrite through the same merge, once), mirroring how a
+Delta conversion works. Every rewrite here follows the store's rewrite
+protocol (locks, heal, scratch write, two-rename swap), defined once in
 :mod:`chillastic_spark.sources`.
 """
 from __future__ import annotations
@@ -37,6 +38,7 @@ from chillastic_spark.sources import (
     N_BUCKETS_DEFAULT,
     DocumentStore,
     bucket_expr,
+    cluster_by_bucket,
     scratch_dir,
     store_mutation,
     swap_dir,
@@ -45,21 +47,6 @@ from chillastic_spark.sources import (
 from chillastic_spark.sources.maintenance import _is_type_partitioned, file_stats
 
 KEY = ["_index", "_type", "_id"]
-
-
-def _key_cond(a: DataFrame, b: DataFrame):
-    """Null-safe key equality for the MERGE anti-join: a plain
-    ``join(KEY)`` never matches NULL == NULL, so a null-typed doc
-    (typeless ES 7+/8 envelopes) would DUPLICATE on every re-upsert
-    instead of replacing — the anti-join must treat NULL keys as
-    equal, exactly like the within-batch dedup window (whose
-    partitionBy groups NULLs together)."""
-    import functools
-    import operator
-
-    return functools.reduce(
-        operator.and_, [a[k].eqNullSafe(b[k]) for k in KEY]
-    )
 
 
 def dedup_within_batch(df: DataFrame) -> DataFrame:
@@ -160,35 +147,41 @@ def upsert(
                 nb = store.bucket_count(index)
                 touched = None if nb is None else _touched_buckets(batch, nb)
                 existing = store.read(spark, index, buckets=touched)
-                merged = _normalise(
-                    existing.join(batch, _key_cond(existing, batch), "left_anti")
-                    .unionByName(batch)
-                )
-                if nb is not None:
-                    _replace_buckets(store, index, nb, merged, touched)
-                elif os.path.isdir(path) and _is_type_partitioned(path):
-                    # an index laid out with Hive _type= partitions
-                    # (write_documents(partition_by=['_type']) — the
-                    # layout its docstring recommends at scale) must
-                    # KEEP that layout: silently rewriting it bucketed
-                    # would destroy the per-type partition pruning and
-                    # blind any stream reading the typed subdirs
-                    _atomic_replace(store, index, merged)
-                else:
-                    # one-time migration: flat (or empty) → bucketed
-                    n = n_buckets or _auto_buckets(path)
-                    if not 0 < n <= 9999:
-                        # bucket dirs are bucket-NNNN and the stream
-                        # glob matches exactly 4 digits — a 5-digit
-                        # bucket id would be written but silently
-                        # excluded from readStream
-                        raise ValueError(
-                            f"n_buckets must be in [1, 9999] (got {n})"
-                        )
+                if nb is None and os.path.isdir(path) and _is_type_partitioned(path):
+                    # a Hive _type= index (the layout write_documents
+                    # recommends at scale) keeps it: bucketing would drop its
+                    # per-type pruning and blind streams on the typed subdirs
+                    _atomic_replace(store, index, _merge(existing, batch))
+                    continue
+                # a flat (or empty) index migrates to buckets, once
+                n = nb or n_buckets or _auto_buckets(path)
+                if not 0 < n <= 9999:
+                    # bucket dirs are bucket-NNNN and the stream glob
+                    # matches exactly 4 digits: bucket 10000 never streams
+                    raise ValueError(f"n_buckets must be in [1, 9999] (got {n})")
+                merged = _merge(existing, batch, n, len(touched) if nb else n)
+                if nb is None:
                     _replace_index_bucketed(store, index, merged, n)
+                else:
+                    _replace_buckets(store, index, nb, merged, touched)
         return sum(r["n"] for r in facts)
     finally:
         df.unpersist()
+
+
+def _merge(existing: DataFrame, batch: DataFrame, n_buckets=None, n_written=0) -> DataFrame:
+    """The MERGE rule, one window per key: a key the batch carries keeps
+    only its batch row, any other key all its existing rows. The window
+    groups NULLs, so a NULL-_type key is replaced, not duplicated. With
+    ``n_buckets`` it reuses the exchange of :func:`cluster_by_bucket`."""
+    rows = existing.withColumn("__new", F.lit(False)).unionByName(
+        batch.withColumn("__new", F.lit(True))
+    )
+    if n_buckets is not None:
+        rows = cluster_by_bucket(rows, n_buckets, n_written)
+    keys = [k for k in ("__bucket", *KEY) if k in rows.columns]
+    rows = rows.withColumn("__newest", F.max("__new").over(Window.partitionBy(*keys)))
+    return rows.filter(F.col("__new") == F.col("__newest")).drop("__new", "__newest")
 
 
 def _replace_buckets(

@@ -36,7 +36,7 @@ from chillastic_spark.sources import N_BUCKETS_DEFAULT, bucket_expr
 # null-safe on EVERY key part: a NULL _id (or _index) row must match
 # its previous delivery, not silently never-match (NULL = NULL is NULL
 # in plain SQL) and duplicate on every at-least-once redelivery — the
-# parquet twin's _key_cond is eqNullSafe on all three for this reason.
+# parquet twin's merge window (sinks._merge) groups NULLs for this reason.
 # The __bucket equality stays plain =: bucket_expr is never NULL
 # (xxhash64(NULL) is the seed constant), and <=> there would defeat
 # partition pruning on some engines.

@@ -24,7 +24,7 @@ amplification per batch, which is the difference between a usable and
 an unusable streaming sink at 100 TB (the ES analog routes on _id the
 same way; Delta/Iceberg MERGE gets this from partition pruning on a
 bucket column). N is pinned per index in ``.n_buckets`` because the
-merge anti-join is only correct when both sides agree on the hash.
+bucket-scoped merge is only correct when both sides agree on the hash.
 
 **Rewrite protocol.** Plain parquet has no transaction log, so every
 writer that changes an index — ``sinks.upsert`` and ``sinks.purge``,
@@ -42,7 +42,8 @@ defined here:
    restored from the newest snapshot, superseded snapshots are removed;
 3. the writer writes its new data to a tagged scratch dir
    (:func:`scratch_dir`), so a crash mid-write leaves the index as it
-   was;
+   was; a bucketed write clusters its rows by bucket first
+   (:func:`cluster_by_bucket`): ONE task writes each bucket, as one file;
 4. :func:`swap_dir` installs the new dir with two renames (live →
    ``.old-``, new → live) under :func:`store_swap_window`, the narrow
    lock readers take SHARED, then removes the snapshot. A crash between
@@ -83,6 +84,7 @@ NON_PORTABLE_SETTINGS = ("uuid", "creation_date", "provided_name")
 # hash-bucketed index layout (see module docstring)
 BUCKET_PREFIX = "bucket-"
 BUCKET_MARKER = ".n_buckets"
+_SCRATCH_TAG = r"(\.tmp-|\.old-|\.new-|\.merge-|\.append-|\.compact-)[0-9a-f]{1,32}"
 
 
 def _env_bucket_count() -> int:
@@ -169,12 +171,20 @@ def scratch_dir(path: str, tag: str):
         shutil.rmtree(tmp, ignore_errors=True)
 
 
+def cluster_by_bucket(df: DataFrame, n_buckets: int, n_written: int) -> DataFrame:
+    """Tag ``df`` with ``__bucket`` and hash-partition it on that into
+    ``min(n_written, spark.sql.shuffle.partitions)`` tasks (a fixed count,
+    which AQE never coalesces), so ONE task holds each bucket."""
+    k = min(n_written, int(df.sparkSession.conf.get("spark.sql.shuffle.partitions")))
+    return df.withColumn("__bucket", bucket_expr(n_buckets)).repartition(k, "__bucket")
+
+
 def write_bucket_tmp(df: DataFrame, tmp: str, n_buckets: int) -> dict[int, str]:
-    """Write ``df`` to ``tmp`` partitioned by hash bucket; returns the
-    dir of every bucket that got rows."""
-    df.withColumn("__bucket", bucket_expr(n_buckets)).write.partitionBy(
-        "__bucket"
-    ).parquet(tmp)
+    """Write ``df`` to ``tmp``, one file per hash bucket (clustered here
+    unless the upsert MERGE did); returns each written bucket's dir."""
+    if "__bucket" not in df.columns:
+        df = cluster_by_bucket(df, n_buckets, n_buckets)
+    df.write.partitionBy("__bucket").parquet(tmp)
     return {
         int(d.split("=", 1)[1]): os.path.join(tmp, d)
         for d in os.listdir(tmp)
@@ -267,7 +277,7 @@ def bucket_expr(n_buckets: int) -> F.Column:
 
     xxhash64 is seed-stable across runs/sessions, so the same _id lands
     in the same bucket forever — the invariant the bucket-scoped merge
-    anti-join rests on."""
+    rests on."""
     return F.pmod(F.xxhash64(F.col("_id")), F.lit(n_buckets)).cast("int")
 
 
@@ -479,10 +489,9 @@ class DocumentStore:
         ``stream_path`` wide-glob companion): a ``bucket-0007.old-ab``
         parked by recovery or an in-flight ``.compact-`` dir would be
         double reads / half-written files."""
-        pat = r"(\.tmp-|\.old-|\.new-|\.merge-|\.append-|\.compact-)[0-9a-f]{1,32}/"
         return (
             df.withColumn("__file", F.input_file_name())
-            .filter(~F.col("__file").rlike(pat))
+            .filter(~F.col("__file").rlike(_SCRATCH_TAG + "/"))
             .drop("__file")
         )
 
@@ -543,9 +552,7 @@ class DocumentStore:
     # match at the END so a legitimate index whose NAME contains a tag
     # substring (e.g. 'snapshot.old-2024x') is not permanently hidden
     # from listings/compaction
-    _SCRATCH_RE = re.compile(
-        r"(\.tmp-|\.old-|\.new-|\.merge-|\.append-|\.compact-)[0-9a-f]{1,32}$"
-    )
+    _SCRATCH_RE = re.compile(_SCRATCH_TAG + "$")
 
     def list_data_indices(self, pattern: str = "*") -> list[str]:
         data = os.path.join(self.root, "data")

@@ -550,7 +550,7 @@ def build_ivf_index(
                     "met_target",
                 )
             }
-        except Exception as e:  # noqa: BLE001 — calibration is advisory
+        except ValueError as e:  # too small a corpus: no held-out queries
             import logging
 
             logging.getLogger("chillastic_spark.vector_index").warning(

@@ -121,6 +121,29 @@ def test_contract_line_demotes_normalized_map_when_over_budget():
     json.loads(line)
 
 
+def test_contract_line_overflow_is_flagged_loudly(capsys):
+    """A `queries` map too big for the budget even after demotion is
+    kept (it is the contract) but flagged: a stderr warning plus
+    `stdout_overflow` in the diagnostics."""
+    import json
+
+    full = _fake_full(22)
+    full["queries"] = {f"q{i:03d}_{'x' * 30}": 1.25 for i in range(200)}
+    out, diag = bench.split_contract_payload(full)
+    line = json.dumps(out, separators=(",", ":"))
+    assert len(line) > bench.STDOUT_BUDGET
+    assert len(out["queries"]) == 200
+    assert diag["stdout_demoted"] == ["queries_normalized"]
+    assert diag["stdout_overflow"] == {
+        "chars": len(line), "budget": bench.STDOUT_BUDGET,
+    }
+    assert "WARNING" in capsys.readouterr().err
+    # a line within budget carries no overflow flag and prints nothing
+    _, diag = bench.split_contract_payload(_fake_full(22))
+    assert "stdout_overflow" not in diag
+    assert capsys.readouterr().err == ""
+
+
 def test_end_to_end_noise_recovery():
     """A loud middle round must not move the quiet-median, and the
     normalized figure must agree with the quiet raw figure when the

@@ -245,6 +245,42 @@ def test_upsert_heals_interrupted_bucket_swap(spark, tmp_path):
     assert store.read(spark, "ix").count() == 101
 
 
+def _parquet_files(store, index) -> dict:
+    """{bucket_dir_name: {parquet file names}} for every bucket."""
+    return {
+        os.path.basename(p): {f for f in os.listdir(p) if f.endswith(".parquet")}
+        for p in store.bucket_paths(index)
+    }
+
+
+def test_every_written_bucket_gets_exactly_one_file(spark, tmp_path):
+    """One task writes each bucket: after a migrating upsert, a merging
+    upsert, a raw append and a purge, every bucket dir the call wrote
+    holds exactly ONE new parquet file, and a rewritten bucket holds
+    only that file."""
+    store = DocumentStore(str(tmp_path / "s"))
+    calls = [
+        ("migrate", True, lambda: upsert(spark, store, _corpus(spark), n_buckets=N_BUCKETS)),
+        ("merge", True, lambda: upsert(
+            spark, store, _batch(spark, [(f"doc{i}", -i) for i in range(0, 200, 9)]))),
+        ("append", False, lambda: store.write_documents(
+            _batch(spark, [(f"new{i}", i) for i in range(30)]), "ix", mode="append")),
+        ("purge", True, lambda: purge(spark, store, "ix", ["doc3", "doc7", "new4"])),
+    ]
+    for name, rewrites, call in calls:
+        before = _parquet_files(store, "ix")
+        call()
+        after = _parquet_files(store, "ix")
+        written = {b: fs - before.get(b, set()) for b, fs in after.items()}
+        written = {b: new for b, new in written.items() if new}
+        assert written, f"{name}: wrote no bucket"
+        for b, new in written.items():
+            assert len(new) == 1, f"{name}: {b} got {len(new)} new files"
+            if rewrites:
+                assert after[b] == new, f"{name}: {b} kept stale files"
+    assert store.read(spark, "ix").count() == 227
+
+
 def _upsert_jobs(spark, store, df, **kw) -> int:
     """Spark jobs one upsert launches: statusTracker ids under a job
     group set for the call alone."""

@@ -550,6 +550,23 @@ def test_connected_components_local_fast_path_matches_loop(spark):
     assert calls["n"] > 1, "cap did not send the big graph to the loop"
 
 
+@pytest.mark.parametrize("raw", ["abc", "", "1.5", "-1", "2147483647"])
+def test_malformed_cc_local_cap_is_rejected(spark, monkeypatch, raw):
+    """A bad ``CHILLASTIC_CC_LOCAL_CAP`` fails ``connected_components``
+    with an error naming the knob and its range, not a bare int()
+    ValueError."""
+    import chillastic_spark.operators.components as C
+
+    edges = spark.createDataFrame([(1, 2)], "id_a long, id_b long")
+    monkeypatch.setenv("CHILLASTIC_CC_LOCAL_CAP", raw)
+    with pytest.raises(
+        ValueError, match=r"CHILLASTIC_CC_LOCAL_CAP .*\[0, 2147483646\]"
+    ):
+        C.connected_components(edges)
+    monkeypatch.setenv("CHILLASTIC_CC_LOCAL_CAP", "2147483646")
+    assert C._local_cap() == 2147483646
+
+
 def test_substring_dup_stats_planted_span(spark):
     """ExactSubstr coverage: a 6-token span shared verbatim by two docs
     is found; a doc repeating a span internally counts both instances;

@@ -210,6 +210,50 @@ def test_ivf_build_calibrates_nprobe_per_corpus(spark, tmp_path):
     assert legacy == legacy_explicit
 
 
+def _tiny_corpus(spark):
+    rows = [(i, [float(i % 3), 1.0, float(i % 5)]) for i in range(24)]
+    return spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+
+
+def test_ivf_build_falls_back_when_corpus_too_small_to_calibrate(
+    spark, tmp_path, monkeypatch, caplog
+):
+    """The expected calibration failure — no usable held-out queries —
+    logs a warning and builds an uncalibrated index."""
+    import logging
+
+    import chillastic_spark.operators.similarity as S
+    from chillastic_spark.sources.vector_index import build_ivf_index
+
+    def no_queries(*a, **k):
+        raise ValueError("ivf_recall_curve: no usable held-out queries")
+
+    monkeypatch.setattr(S, "ivf_recall_curve", no_queries)
+    with caplog.at_level(logging.WARNING, "chillastic_spark.vector_index"):
+        meta = build_ivf_index(_tiny_corpus(spark), str(tmp_path / "i"), n_cells=2)
+    assert meta["calibrated_nprobe"] is None and meta["calibration"] is None
+    assert "calibration skipped" in caplog.text
+    assert meta["n_vectors"] == 24
+
+
+def test_ivf_build_calibration_programming_error_propagates(
+    spark, tmp_path, monkeypatch
+):
+    """Calibration is advisory only against a too-small corpus: a
+    programming error inside it must surface, not be logged away."""
+    import pytest
+
+    import chillastic_spark.operators.similarity as S
+    from chillastic_spark.sources.vector_index import build_ivf_index
+
+    def broken(*a, **k):
+        raise TypeError("calibrate_nprobe() got an unexpected keyword")
+
+    monkeypatch.setattr(S, "calibrate_nprobe", broken)
+    with pytest.raises(TypeError, match="unexpected keyword"):
+        build_ivf_index(_tiny_corpus(spark), str(tmp_path / "i"), n_cells=2)
+
+
 def test_update_rejects_duplicate_ids_and_skip_is_idempotent(spark, tmp_path):
     """At-least-once redelivery: on_existing='skip' makes a replayed
     batch a no-op (n_vectors stable, no duplicate rows); the default
