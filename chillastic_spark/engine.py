@@ -3,9 +3,10 @@
 The Spark-native control plane replacing the reference's
 worker/manager/Redis machinery (SURVEY §2.11, §3): Spark supplies
 dispatch/retry/heartbeat; what remains is planning (build_backlog),
-per-subtask pipelines (Transfer), checkpointed state (TaskState JSON —
-the Redis analog; at deployment scale this would be a Delta table), and
-a status API.
+one pipeline per run of subtasks (Transfer; a run is a backlog head plus
+the small same-index subtasks that fuse with it, see Transfer.fuses),
+checkpointed state (TaskState JSON — the Redis analog; at deployment
+scale this would be a Delta table), and a status API.
 """
 from __future__ import annotations
 
@@ -21,7 +22,7 @@ from pyspark.sql import SparkSession
 from chillastic_spark.locks import FileLock, LockHeld
 from chillastic_spark.model import ActionRef, Progress, Subtask, Task, validate_object_id
 from chillastic_spark.operators.mutate import apply_data_mutators, mutate_objects
-from chillastic_spark.plans import Bound, DataFrameSizeStats, plan_bounds
+from chillastic_spark.plans import TARGET_BULK_BYTES, Bound, DataFrameSizeStats, plan_bounds
 from chillastic_spark.registry import Filters, Mutators
 from chillastic_spark.sinks import upsert
 from chillastic_spark.sources import DocumentStore, open_store
@@ -205,32 +206,61 @@ class TaskState:
             self.save()
         return True
 
-    def pop(self, with_progress: bool = False) -> Optional[Subtask]:
-        """FIFO pop. ``with_progress=True`` writes the initial progress
-        entry IN THE SAME atomic round: popped-but-untracked is a
-        window where the subtask exists in NO persisted structure
-        (backlog, progress, completed), so a concurrent build_backlog's
-        in-flight guard passes and re-enqueues it — the slice then
-        transfers twice. One round closes the window."""
+    def pop_run(
+        self,
+        fuses: Optional[Callable[[list, Subtask], bool]] = None,
+        limit: Optional[int] = None,
+        with_progress: bool = False,
+    ) -> list[Subtask]:
+        """FIFO pop of a RUN: the backlog head plus the entries right
+        after it that ``fuses(run, next)`` admits, at most ``limit``
+        members (no ``fuses``: a run of one). ``with_progress=True``
+        writes every member's initial progress entry IN THE SAME atomic
+        round: popped-but-untracked is a window where a subtask exists
+        in NO persisted structure (backlog, progress, completed), so a
+        concurrent build_backlog's in-flight guard passes and
+        re-enqueues it — the slice then transfers twice. One round
+        closes the window."""
 
         def _pop():
-            if not self.data["backlog"]:
-                return None
-            sid, count = self.data["backlog"].pop(0)
+            backlog = self.data["backlog"]
+            if not backlog or (limit is not None and limit < 1):
+                return []
+            run = [Subtask.from_id(*backlog[0])]
+            while (
+                fuses is not None
+                and len(run) < len(backlog)
+                and (limit is None or len(run) < limit)
+            ):
+                nxt = Subtask.from_id(*backlog[len(run)])
+                if not fuses(run, nxt):
+                    break
+                run.append(nxt)
+            popped = backlog[: len(run)]
+            del backlog[: len(run)]
             if with_progress:
-                self.data["progress"][sid] = vars(
-                    Progress(tick=0, transferred=0, total=count).validate()
-                )
+                for sid, count in popped:
+                    self.data["progress"][sid] = vars(
+                        Progress(tick=0, transferred=0, total=count).validate()
+                    )
             self.save()
-            return Subtask.from_id(sid, count)
+            return run
 
         return self._atomic(_pop)
 
-    def complete(self, subtask: Subtask) -> None:
+    def pop(self, with_progress: bool = False) -> Optional[Subtask]:
+        """FIFO pop of one subtask: :meth:`pop_run`'s run of one."""
+        run = self.pop_run(with_progress=with_progress)
+        return run[0] if run else None
+
+    def complete(self, *subtasks: Subtask) -> None:
+        """Mark every given subtask (one run) completed in one round."""
+
         def _complete():
-            sid = subtask.subtask_id()
-            self.data["progress"].pop(sid, None)
-            self.data["completed"][sid] = subtask.count
+            for sub in subtasks:
+                sid = sub.subtask_id()
+                self.data["progress"].pop(sid, None)
+                self.data["completed"][sid] = sub.count
             self.save()
 
         self._atomic(_complete)
@@ -246,9 +276,13 @@ class TaskState:
         self._atomic(_update)
 
     def log_error(self, subtask: Optional[Subtask], message: str) -> None:
-        self._atomic(lambda: self._log_error_unlocked(subtask, message))
+        def _log():
+            self._append_error(subtask, message)
+            self.save()
 
-    def _log_error_unlocked(self, subtask: Optional[Subtask], message: str) -> None:
+        self._atomic(_log)
+
+    def _append_error(self, subtask: Optional[Subtask], message: str) -> None:
         self.data["errors"].append(
             {
                 "ts": _dt.datetime.now(_dt.timezone.utc).isoformat(),
@@ -256,15 +290,18 @@ class TaskState:
                 "message": message,
             }
         )
-        self.save()
 
-    def fail(self, subtask: Subtask, message: str) -> None:
+    def fail(self, *subtasks: Subtask, message: str) -> None:
         """A failed subtask is neither completed nor in progress — it
-        reappears only on backlog rebuild (worker.js:108-111)."""
+        reappears only on backlog rebuild (worker.js:108-111). Every
+        member of a failed run gets its own error record, all in one
+        round."""
 
         def _fail():
-            self.data["progress"].pop(subtask.subtask_id(), None)
-            self._log_error_unlocked(subtask, message)
+            for sub in subtasks:
+                self.data["progress"].pop(sub.subtask_id(), None)
+                self._append_error(sub, message)
+            self.save()
 
         self._atomic(_fail)
 
@@ -322,19 +359,50 @@ class Transfer:
     def mutate(self, objs: list, type_: str) -> list:
         return mutate_objects(objs, self.mutators_by_type.get(type_))
 
-    def transfer_data(self, subtask: Subtask) -> int:
-        """Scan one (index,type,[size-range)) slice, apply the data
-        mutator chain, MERGE into dest (transfer.js:103-151 reshaped:
-        the scroll loop IS the partitioned scan; flush buffering IS the
-        write; retries are Spark task retries)."""
-        flush = subtask.flush_size if (subtask.flush_size or 0) > 0 else 100
-        read_kw = {}
-        if hasattr(self.source, "deliver"):  # ES source pages at flushSize
-            read_kw["flush_size"] = flush
-        df = self.source.read(
-            self.spark, subtask.index, subtask.type, subtask.min_size,
-            subtask.max_size, **read_kw,
-        )
+    def fuses(self, run: list[Subtask], nxt: Subtask) -> bool:
+        """Whether ``nxt`` joins ``run`` in one transfer. Only between
+        two stores without ``deliver`` (parquet, where the planned
+        flushSize is unused; ES and Delta sides keep one subtask per
+        transfer), and only when every member is a size-ranged
+        ``documents`` subtask of ONE source index and the members'
+        ``count × max_size`` stays within TARGET_BULK_BYTES — a run is
+        never larger than one reference bulk request (subtasks.js:267),
+        so at scale nothing fuses. Different source indices never fuse:
+        ids a daily→monthly re-route makes collide across days still
+        resolve in backlog order."""
+        if hasattr(self.source, "deliver") or hasattr(self.dest, "deliver"):
+            return False
+        members = [*run, nxt]
+        return all(
+            s.kind == "documents" and s.has_size_range() and s.index == run[0].index
+            for s in members
+        ) and sum(s.count * s.max_size for s in members) <= TARGET_BULK_BYTES
+
+    def transfer_data(self, run: list[Subtask]) -> int:
+        """Scan a run of (index,type,[size-range)) slices, apply the data
+        mutator chain once, MERGE into dest with one upsert
+        (transfer.js:103-151 reshaped: the scroll loop IS the
+        partitioned scan; flush buffering IS the write; retries are
+        Spark task retries). A parquet source reads the run's one index
+        in ONE scan that keeps every member's slice
+        (DocumentStore.read_slices); an ES source pages its scroll at
+        the planned flushSize, and its runs are of one. A run has more
+        than one member only under :meth:`fuses`; within it, two rows
+        with one key resolve by upsert's batch tie-break
+        (dedup_within_batch), so the outcome does not depend on how the
+        planner split the sizes."""
+        head = run[0]
+        flush = head.flush_size if (head.flush_size or 0) > 0 else 100
+        if hasattr(self.source, "deliver"):
+            df = self.source.read(
+                self.spark, head.index, head.type, head.min_size, head.max_size,
+                flush_size=flush,
+            )
+        else:
+            df = self.source.read_slices(
+                self.spark, head.index,
+                [(sub.type, sub.min_size, sub.max_size) for sub in run],
+            )
         df = apply_data_mutators(df, self.mutators_by_type.get("data"))
         # sink dispatch: ES destinations deliver via _bulk doc_as_upsert,
         # parquet stores via the bucket-scoped MERGE — same semantics.
@@ -346,7 +414,7 @@ class Transfer:
         else:
             delivered = upsert(self.spark, self.dest, df)
         if self.update_callback:
-            self.update_callback(delivered, subtask.count)
+            self.update_callback(delivered, sum(sub.count for sub in run))
         return delivered
 
     def transfer_indices(self, names: str) -> int:
@@ -841,11 +909,22 @@ class Engine:
         shared: bool = False,
     ) -> dict:
         """Drain the backlog (worker.js:61-144 collapsed: Spark is the
-        worker pool; each subtask is one distributed job). Errors are
-        logged and the subtask is NOT re-queued (worker.js:108-111) —
-        it reappears on the next build_backlog.
+        worker pool; each RUN of subtasks is one distributed pipeline).
+        A run is the backlog head plus the entries right after it that
+        fuse with it (:meth:`Transfer.fuses`: parquet on both sides, one
+        source index, every member size-ranged, the members'
+        ``count × max_size`` within TARGET_BULK_BYTES); its source index
+        is scanned once for all members, mutated once and upserted
+        once, so small subtasks do not each pay a full pipeline. Within
+        a run, two rows with one key resolve by upsert's batch
+        tie-break, not by backlog order:
+        the outcome no longer depends on how the planner split the
+        sizes. A run never takes more members than ``max_subtasks``
+        leaves. Errors are logged per member and the run is NOT
+        re-queued (worker.js:108-111) — its members reappear on the next
+        build_backlog.
 
-        ``parallelism`` > 1 submits that many subtasks as CONCURRENT
+        ``parallelism`` > 1 submits that many runs as CONCURRENT
         Spark jobs from driver threads — the analog of the reference's
         N worker processes, useful when subtasks are small relative to
         cluster capacity. State mutations serialize on a lock.
@@ -888,35 +967,30 @@ class Engine:
             with lock:
                 if not self._running:
                     return False
-                if max_subtasks is not None and done[0] >= max_subtasks:
-                    return False
-                # pop + initial progress in ONE atomic round — a
-                # separate update_progress left a window where the
-                # subtask was in no persisted structure and a
+                left = None if max_subtasks is None else max_subtasks - done[0]
+                # pop + initial progress of every member in ONE atomic
+                # round — a separate update_progress left a window where
+                # a subtask was in no persisted structure and a
                 # concurrent rebuild re-enqueued it (duplicate slice)
-                sub = state.pop(with_progress=True)
-                if sub is None:
+                run = state.pop_run(transfer.fuses, left, with_progress=True)
+                if not run:
                     return False
-                done[0] += 1
+                done[0] += len(run)
+            head = run[0]
             try:
-                if sub.kind == "documents":
-                    transferred = transfer.transfer_data(sub)
-                    with lock:
-                        state.update_progress(
-                            sub,
-                            Progress(tick=1, transferred=transferred, total=sub.count),
-                        )
-                elif sub.kind == "index":
-                    transfer.transfer_indices(sub.names)
-                elif sub.kind == "template":
-                    transfer.transfer_templates(sub.names)
+                if head.kind == "documents":
+                    transfer.transfer_data(run)
+                elif head.kind == "index":
+                    transfer.transfer_indices(head.names)
+                elif head.kind == "template":
+                    transfer.transfer_templates(head.names)
                 else:
-                    raise TaskError(f"unknown subtask kind {sub.kind}")
+                    raise TaskError(f"unknown subtask kind {head.kind}")
                 with lock:
-                    state.complete(sub)
+                    state.complete(*run)
             except Exception:
                 with lock:
-                    state.fail(sub, traceback.format_exc(limit=5))
+                    state.fail(*run, message=traceback.format_exc(limit=5))
             return True
 
         try:

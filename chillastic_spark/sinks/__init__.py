@@ -55,7 +55,10 @@ def dedup_within_batch(df: DataFrame) -> DataFrame:
     meaningful after a distributed mutate (and would vary with
     partitioning); a stable winner keeps re-runs byte-identical. Shared
     by this sink and the Delta sink (whose MERGE throws on two source
-    rows matching one target)."""
+    rows matching one target). The engine upserts a run of one source
+    index's size-range subtasks as one batch (Engine.run_task), so two
+    rows with one key in different size ranges resolve here too: the
+    outcome no longer depends on how the planner split the sizes."""
     rank = F.row_number().over(
         Window.partitionBy(*KEY).orderBy(F.desc(F.md5(F.col("_source"))), F.desc("_size"))
     )

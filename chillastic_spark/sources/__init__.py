@@ -54,6 +54,7 @@ from __future__ import annotations
 
 import contextlib
 import fnmatch
+import functools
 import json
 import os
 import re
@@ -351,6 +352,21 @@ def open_store(path_or_url: str, create: bool = True):
     return DocumentStore(path_or_url, create=create)
 
 
+def _slice_filter(type: Optional[str], min_size: float, max_size: float):
+    """The predicate of one (type, [size-range)) slice, or None when the
+    slice is the whole index. The range applies only when both bounds
+    are set (subtask.js:61-74), and NULL ``_size`` behaves as size 0
+    (matching the planner's stats) so unsized docs land in EXACTLY the
+    lowest range — a bare range predicate would silently drop them."""
+    keep = None if type is None else F.col("_type") == type
+    if min_size >= 0 and max_size >= 0:
+        in_range = (F.col("_size") >= min_size) & (F.col("_size") < max_size)
+        if min_size <= 0 < max_size:
+            in_range = in_range | F.col("_size").isNull()
+        keep = in_range if keep is None else keep & in_range
+    return keep
+
+
 class DocumentStore:
     def __init__(self, root: str, create: bool = True):
         self.root = root
@@ -622,17 +638,22 @@ class DocumentStore:
         if df is None:
             return spark.createDataFrame([], ENVELOPE_SCHEMA)
         df = df.withColumn("_index", F.lit(index))
-        if type is not None:
-            df = df.filter(F.col("_type") == type)
-        if min_size >= 0 and max_size >= 0:
-            # NULL _size behaves as size 0 (matching the planner's
-            # stats) so unsized docs land in EXACTLY the lowest bucket —
-            # a bare range predicate would silently drop them
-            in_range = (F.col("_size") >= min_size) & (F.col("_size") < max_size)
-            if min_size <= 0 < max_size:
-                in_range = in_range | F.col("_size").isNull()
-            df = df.filter(in_range)
-        return df
+        keep = _slice_filter(type, min_size, max_size)
+        return df if keep is None else df.filter(keep)
+
+    def read_slices(
+        self, spark: SparkSession, index: str, slices: "list[tuple]"
+    ) -> DataFrame:
+        """ONE scan of ``index`` keeping the rows of any of ``slices``,
+        each a ``(type, min_size, max_size)`` triple filtered exactly as
+        :meth:`read` filters it. The engine reads a run of fused
+        subtasks this way: the index is listed and decoded once, not
+        once per member."""
+        keep = [_slice_filter(*s) for s in slices]
+        df = self.read(spark, index)
+        if any(k is None for k in keep):  # a slice that is the whole index
+            return df
+        return df.filter(functools.reduce(lambda a, b: a | b, keep))
 
     def read_sizes(
         self, spark: SparkSession, index: str, type: Optional[str] = None

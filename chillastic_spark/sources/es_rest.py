@@ -41,6 +41,7 @@ the TTL.
 from __future__ import annotations
 
 import json
+import math
 import os
 import ssl
 import time
@@ -61,9 +62,45 @@ from chillastic_spark.sources import (
 from chillastic_spark.sources.elasticsearch import SCROLL_TTL, _range_body
 
 BULK_REJECTED = "es_rejected_execution_exception"
-DEFAULT_TIMEOUT = float(os.environ.get("CHILLASTIC_ES_TIMEOUT", "30"))
-# per-slice scroll fan-out; "auto" sizes off spark.defaultParallelism
-DEFAULT_SLICES = os.environ.get("CHILLASTIC_ES_SLICES", "auto")
+
+
+def _env_timeout() -> float:
+    """``CHILLASTIC_ES_TIMEOUT`` (default 30): the per-request timeout
+    in seconds, a finite number > 0."""
+    raw = os.environ.get("CHILLASTIC_ES_TIMEOUT", "30")
+    try:
+        t = float(raw)
+    except ValueError:
+        t = math.nan
+    if not (math.isfinite(t) and t > 0):
+        raise ValueError(
+            f"CHILLASTIC_ES_TIMEOUT must be a finite number of seconds > 0 "
+            f"(got {raw!r})"
+        )
+    return t
+
+
+def _env_slices() -> "str | int":
+    """``CHILLASTIC_ES_SLICES`` (default ``auto``): the per-slice scroll
+    fan-out, ``auto`` (sized off spark.defaultParallelism) or an
+    integer >= 1."""
+    raw = os.environ.get("CHILLASTIC_ES_SLICES", "auto")
+    if raw == "auto":
+        return raw
+    try:
+        n = int(raw)
+    except ValueError:
+        n = 0
+    if n < 1:
+        raise ValueError(
+            f"CHILLASTIC_ES_SLICES must be 'auto' or an integer >= 1 "
+            f"(got {raw!r})"
+        )
+    return n
+
+
+DEFAULT_TIMEOUT = _env_timeout()
+DEFAULT_SLICES = _env_slices()
 WORKER_HEADER = "X-Chillastic-Worker"
 
 

@@ -498,3 +498,314 @@ def test_removed_task_state_is_not_resurrected(spark, tmp_path):
     with pytest.raises(TaskError, match="removed"):
         s2.log_error(None, "boom")  # shared-mode atomic op
     assert not os.path.exists(s1.path)  # nothing resurrected
+
+
+# ------------------------------------------------ runs: fused subtasks
+
+
+class _Parquet:
+    """A store stub without ``deliver`` (the parquet shape)."""
+
+
+class _Wire(_Parquet):
+    """A store stub with ``deliver`` (the ES / Delta shape)."""
+
+    def deliver(self, spark, df, flush_size=100):
+        return 0
+
+
+def _doc_sub(index, type_="t", lo=0, hi=604, count=5):
+    return Subtask(kind="documents", index=index, type=type_,
+                   min_size=lo, max_size=hi, count=count)
+
+
+def _runs(tmp_path, subs, transfer, limit=None):
+    """Drain a backlog of ``subs`` into runs, as run_task pops them."""
+    st = TaskState(str(tmp_path / "runs"), "t")
+    for s in subs:
+        st.enqueue(s, save=False)
+    st.save()
+    out = []
+    while True:
+        run = st.pop_run(transfer.fuses, limit)
+        if not run:
+            return out
+        out.append(run)
+
+
+def test_run_stops_at_a_different_source_index(tmp_path):
+    subs = [_doc_sub("a", "t1"), _doc_sub("a", "t1", 901, 1001),
+            _doc_sub("a", "t2"), _doc_sub("b", "t1"), _doc_sub("b", "t2")]
+    runs = _runs(tmp_path, subs, Transfer(None, _Parquet(), _Parquet()))
+    assert [len(r) for r in runs] == [3, 2]
+    assert [{s.index for s in r} for r in runs] == [{"a"}, {"b"}]
+
+
+def test_run_stops_at_a_member_without_size_range(tmp_path):
+    unsized = Subtask(kind="documents", index="a", type="t2", flush_size=50, count=5)
+    subs = [_doc_sub("a"), unsized, _doc_sub("a", "t3")]
+    runs = _runs(tmp_path, subs, Transfer(None, _Parquet(), _Parquet()))
+    assert [len(r) for r in runs] == [1, 1, 1]
+    # catalog subtasks never fuse either
+    cat = [Subtask(kind="index", names="a"), Subtask(kind="index", names="b")]
+    runs = _runs(tmp_path / "cat", cat, Transfer(None, _Parquet(), _Parquet()))
+    assert [len(r) for r in runs] == [1, 1]
+
+
+def test_run_stops_at_the_bulk_byte_bound(tmp_path):
+    """Members' count × max_size stays within TARGET_BULK_BYTES: a run
+    is never larger than one reference bulk request."""
+    from chillastic_spark.plans import TARGET_BULK_BYTES
+
+    fill = (TARGET_BULK_BYTES - 1000) // 1000  # head (1 × 1000 B) + fill × 1000 B
+    at_bound = [_doc_sub("a", hi=1000, count=1), _doc_sub("a", "t2", hi=1000, count=fill)]
+    runs = _runs(tmp_path, at_bound, Transfer(None, _Parquet(), _Parquet()))
+    assert [len(r) for r in runs] == [2]
+    over = [_doc_sub("a", hi=1000, count=1), _doc_sub("a", "t2", hi=1000, count=fill + 1)]
+    runs = _runs(tmp_path / "over", over, Transfer(None, _Parquet(), _Parquet()))
+    assert [len(r) for r in runs] == [1, 1]
+
+
+def test_run_stops_at_the_max_subtasks_remainder(tmp_path):
+    subs = [_doc_sub("a", f"t{i}") for i in range(5)]
+    runs = _runs(tmp_path, subs, Transfer(None, _Parquet(), _Parquet()), limit=2)
+    assert [len(r) for r in runs] == [2, 2, 1]
+    st = TaskState(str(tmp_path / "spent"), "t")
+    st.enqueue(subs[0])
+    assert st.pop_run(Transfer(None, _Parquet(), _Parquet()).fuses, limit=0) == []
+    assert len(st.data["backlog"]) == 1
+
+
+@pytest.mark.parametrize("sides", [(_Wire, _Parquet), (_Parquet, _Wire), (_Wire, _Wire)])
+def test_a_store_with_deliver_gives_runs_of_one(tmp_path, sides):
+    src, dst = sides
+    subs = [_doc_sub("a", f"t{i}") for i in range(3)]
+    runs = _runs(tmp_path, subs, Transfer(None, src(), dst()))
+    assert [len(r) for r in runs] == [1, 1, 1]
+
+
+def test_run_pop_complete_and_fail_are_one_round_each(tmp_path, monkeypatch):
+    """Popping a run writes every member's progress entry, and
+    completing or failing the run updates every member, each in ONE
+    state save."""
+    st = TaskState(str(tmp_path / "st"), "t")
+    for i in range(4):
+        st.enqueue(_doc_sub("a", f"t{i}", count=i + 1), save=False)
+    st.save()
+    saves = []
+    real_save = TaskState.save
+    monkeypatch.setattr(TaskState, "save", lambda self: (saves.append(1), real_save(self)))
+    fuse = Transfer(None, _Parquet(), _Parquet()).fuses
+    run = st.pop_run(fuse, limit=2, with_progress=True)
+    on_disk = json.load(open(st.path))
+    assert len(saves) == 1 and [s.type for s in run] == ["t0", "t1"]
+    assert sorted(on_disk["progress"]) == sorted(s.subtask_id() for s in run)
+    assert len(on_disk["backlog"]) == 2
+    st.complete(*run)
+    assert len(saves) == 2
+    assert st.data["completed"] == {s.subtask_id(): s.count for s in run}
+    assert st.data["progress"] == {}
+    rest = st.pop_run(fuse, with_progress=True)
+    st.fail(*rest, message="boom")
+    assert len(saves) == 4 and st.data["progress"] == {}
+    assert [e["subtask_id"] for e in st.data["errors"]] == [s.subtask_id() for s in rest]
+
+
+def _sized(prefix, type_, n_small=4, n_big=2):
+    """Docs whose ``_size`` splits one (index, type) into two planned
+    size ranges, [0, 604) and [901, 1001)."""
+    return [
+        {"_id": f"{prefix}-{type_}-{i}", "_type": type_, "_source": {"v": i},
+         "_size": 10 if i < n_small else 1000}
+        for i in range(n_small + n_big)
+    ]
+
+
+def _rows(store, spark, index):
+    return sorted(
+        (r["_index"], r["_type"], r["_id"], r["_source"], r["_size"])
+        for r in store.read(spark, index).collect()
+    )
+
+
+def _count_upserts(monkeypatch):
+    import chillastic_spark.engine as engine_mod
+
+    calls = []
+    real = engine_mod.upsert
+
+    def counting(spark, store, df, *a, **k):
+        calls.append(1)
+        return real(spark, store, df, *a, **k)
+
+    monkeypatch.setattr(engine_mod, "upsert", counting)
+    return calls
+
+
+def _two_day_corpus():
+    return {
+        day: _sized(day, "t1") + _sized(day, "t2")
+        for day in ("logs_2024-01-01", "logs_2024-01-02")
+    }
+
+
+def test_parquet_task_upserts_once_per_source_index(spark, tmp_path, store_factory, monkeypatch):
+    """2 source indices × 2 types × 2 size ranges: 8 planned subtasks,
+    2 runs, one upsert each; the destination holds exactly the mutated
+    source rows."""
+    corpus = _two_day_corpus()
+    src = store_factory("src", corpus)
+    dst = store_factory("dst")
+    eng = _engine(spark, tmp_path)
+    eng.mutators.add("indexDate", DATE_MUTATOR)
+    st = eng.add_task("t1", _task(src, dst, transfer={"from_indices": "logs_*"},
+                                  mutators=[ActionRef(id="indexDate")]))
+    assert len(st.data["backlog"]) == 8
+    calls = _count_upserts(monkeypatch)
+    status = eng.run_task("t1")
+    assert len(calls) == 2
+    assert status["percentComplete"] == 100.0 and status["completed"] == 24
+    expected = sorted(
+        ("logs_2024-01", t, i, s, z)
+        for day in corpus
+        for (_, t, i, s, z) in _rows(src, spark, day)
+    )
+    assert _rows(dst, spark, "logs_2024-01") == expected
+
+
+def test_read_slices_is_one_scan_keeping_each_members_rows(spark, store_factory):
+    """A fused run's read: ONE scan of its index that keeps exactly the
+    rows each member's own read keeps — an unsized doc (NULL _size)
+    only in the lowest range, an unranged slice its whole type."""
+    from chillastic_spark.sources import ENVELOPE_SCHEMA
+
+    src = store_factory("src", {"ix": _sized("ix", "t1") + _sized("ix", "t2")})
+    src.write_documents(
+        spark.createDataFrame([("ix", "t1", "unsized", "{}", None)], ENVELOPE_SCHEMA), "ix"
+    )
+
+    def rows(df):
+        return sorted((r["_type"], r["_id"], r["_size"]) for r in df.collect())
+
+    def scans(df):
+        return df._jdf.queryExecution().executedPlan().toString().count("FileScan")
+
+    for slices in (
+        [("t1", 0, 604)],
+        [("t1", 0, 604), ("t1", 901, 1001), ("t2", 901, 1001)],
+        [("t1", 901, 1001), ("t2", -1, -1)],
+    ):
+        fused = src.read_slices(spark, "ix", slices)
+        expected = sorted(r for s in slices for r in rows(src.read(spark, "ix", *s)))
+        assert rows(fused) == expected
+        assert scans(fused) == 1
+    assert ("t1", "unsized", None) in rows(src.read_slices(spark, "ix", [("t1", 0, 604)]))
+    assert rows(src.read_slices(spark, "ix", [("t2", 0, 604), (None, -1, -1)])) == rows(
+        src.read(spark, "ix")
+    )
+
+
+def test_raising_mutator_fails_every_member_of_its_run(spark, tmp_path, store_factory, monkeypatch):
+    src = store_factory("src", {"ix": _sized("ix", "t1")})
+    dst = store_factory("dst")
+    eng = _engine(spark, tmp_path)
+    bad = "TYPE='data'\ndef predicate(d,a):\n    return True\ndef mutate(d,a):\n    raise RuntimeError('boom')\n"
+    eng.mutators.add("boom", bad)
+    st = eng.add_task("t1", _task(src, dst, transfer={"from_indices": "ix"},
+                                  mutators=[ActionRef(id="boom")]))
+    planned = [sid for sid, _ in st.data["backlog"]]
+    assert len(planned) == 2
+    calls = _count_upserts(monkeypatch)
+    status = eng.run_task("t1")
+    assert len(calls) == 1  # one run: the two members failed together
+    assert status["completed"] == 0 and status["backlog"] == 0
+    errs = eng.get_task_errors("t1")
+    assert [e["subtask_id"] for e in errs] == planned
+    assert all("boom" in e["message"] for e in errs)
+    eng.build_backlog("t1")
+    assert [sid for sid, _ in TaskState(str(tmp_path / "state"), "t1").data["backlog"]] == planned
+    assert eng.get_task_status("t1")["backlog"] == 6
+
+
+def test_run_stopped_by_max_subtasks_resumes_to_the_expected_rows(
+    spark, tmp_path, store_factory, monkeypatch
+):
+    """The reindex_merge shape: stop part-way through a fusible run,
+    then a fresh Engine rebuilds the backlog and drains the rest."""
+    corpus = _two_day_corpus()
+    src = store_factory("src", corpus)
+    dst = store_factory("dst")
+    eng = _engine(spark, tmp_path)
+    eng.add_task("t1", _task(src, dst, transfer={"from_indices": "logs_*"}))
+    calls = _count_upserts(monkeypatch)
+    status = eng.run_task("t1", max_subtasks=3)
+    state = TaskState(str(tmp_path / "state"), "t1")
+    assert len(calls) == 1 and len(state.data["completed"]) == 3
+    assert len(state.data["backlog"]) == 5 and status["completed"] == 4 + 2 + 4
+    resumed = _engine(spark, tmp_path)
+    resumed.build_backlog("t1")
+    assert resumed.run_task("t1")["percentComplete"] == 100.0
+    assert len(calls) == 3  # the first day's last member, then the second day
+    for day in corpus:
+        assert _rows(dst, spark, day) == _rows(src, spark, day)
+
+
+def _md5(source: dict) -> str:
+    import hashlib
+
+    return hashlib.md5(json.dumps(source, sort_keys=True).encode()).hexdigest()
+
+
+def test_duplicate_key_across_size_ranges_resolves_by_batch_tie_break(
+    spark, tmp_path, store_factory
+):
+    """One source index holds two rows with one key, in different size
+    ranges. Both ranges are one run, so upsert's batch tie-break
+    (highest md5(_source), then _size) picks the winner — not backlog
+    order, which would let the later (larger-size) range overwrite."""
+    small, big = next(
+        (a, b)
+        for a, b in (({"v": f"small{i}"}, {"v": "big"}) for i in range(100))
+        if _md5(a) > _md5(b)
+    )
+    docs = _sized("ix", "t1") + [
+        {"_id": "k", "_type": "t1", "_source": small, "_size": 10},
+        {"_id": "k", "_type": "t1", "_source": big, "_size": 1000},
+    ]
+    src = store_factory("src", {"ix": docs})
+    dst = store_factory("dst")
+    eng = _engine(spark, tmp_path)
+    st = eng.add_task("t1", _task(src, dst, transfer={"from_indices": "ix"}))
+    ranges = [Subtask.from_id(sid) for sid, _ in st.data["backlog"]]
+    assert [(s.min_size, s.max_size) for s in ranges] == [(0, 604), (901, 1001)]
+    eng.run_task("t1")
+    won = dst.read(spark, "ix").filter(F.col("_id") == "k").collect()
+    assert [json.loads(r["_source"]) for r in won] == [small]
+
+
+def test_colliding_ids_from_different_source_indices_resolve_in_backlog_order(
+    spark, tmp_path, store_factory
+):
+    """A daily→monthly rollup whose ids collide across days: each day
+    is its own run, so the later day (later in the backlog) wins even
+    where the md5 tie-break would have picked the earlier one."""
+    first, second = next(
+        (a, b)
+        for a, b in (({"v": f"day1-{i}"}, {"v": "day2"}) for i in range(100))
+        if _md5(a) > _md5(b)
+    )
+    corpus = {
+        day: _sized(day, "t1") + [{"_id": "k", "_type": "t1", "_source": s, "_size": 10}]
+        for day, s in (("logs_2024-01-01", first), ("logs_2024-01-02", second))
+    }
+    src = store_factory("src", corpus)
+    dst = store_factory("dst")
+    eng = _engine(spark, tmp_path)
+    eng.mutators.add("indexDate", DATE_MUTATOR)
+    st = eng.add_task("t1", _task(src, dst, transfer={"from_indices": "logs_*"},
+                                  mutators=[ActionRef(id="indexDate")]))
+    days = [Subtask.from_id(sid).index for sid, _ in st.data["backlog"]]
+    assert days == ["logs_2024-01-01"] * 2 + ["logs_2024-01-02"] * 2
+    eng.run_task("t1")
+    won = dst.read(spark, "logs_2024-01").filter(F.col("_id") == "k").collect()
+    assert [json.loads(r["_source"]) for r in won] == [second]

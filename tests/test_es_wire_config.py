@@ -167,6 +167,51 @@ def test_auth_token_defaults_from_env(monkeypatch):
     assert Wire("http://h:9200").auth_token is None
 
 
+@pytest.mark.parametrize("raw", ["abc", "", "-5", "0", "nan", "inf"])
+def test_malformed_es_timeout_is_rejected(monkeypatch, raw):
+    """A bad ``CHILLASTIC_ES_TIMEOUT`` is refused with an error naming
+    the knob and its range, not a bare float() error or a silently
+    accepted non-positive timeout."""
+    monkeypatch.setenv("CHILLASTIC_ES_TIMEOUT", raw)
+    with pytest.raises(ValueError, match=r"CHILLASTIC_ES_TIMEOUT .*> 0"):
+        es_rest._env_timeout()
+    monkeypatch.setenv("CHILLASTIC_ES_TIMEOUT", "2.5")
+    assert es_rest._env_timeout() == 2.5
+    monkeypatch.delenv("CHILLASTIC_ES_TIMEOUT")
+    assert es_rest._env_timeout() == 30.0
+
+
+@pytest.mark.parametrize("raw", ["abc", "", "0", "-3", "1.5", "AUTO"])
+def test_malformed_es_slices_is_rejected(monkeypatch, raw):
+    """A bad ``CHILLASTIC_ES_SLICES`` is refused up front with an error
+    naming the knob and what it accepts, instead of a bare int() error
+    at scan time (or 0 and -3 silently becoming 1)."""
+    monkeypatch.setenv("CHILLASTIC_ES_SLICES", raw)
+    with pytest.raises(ValueError, match=r"CHILLASTIC_ES_SLICES .*'auto' or an integer >= 1"):
+        es_rest._env_slices()
+    monkeypatch.setenv("CHILLASTIC_ES_SLICES", "3")
+    assert es_rest._env_slices() == 3
+    monkeypatch.setenv("CHILLASTIC_ES_SLICES", "auto")
+    assert es_rest._env_slices() == "auto"
+
+
+def test_malformed_es_knob_fails_the_import_by_name():
+    """The knobs are read when the module is imported: a bad value
+    stops the import with the knob's name in the message."""
+    import os
+    import subprocess
+    import sys
+
+    env = {**os.environ, "CHILLASTIC_ES_TIMEOUT": "abc"}
+    proc = subprocess.run(
+        [sys.executable, "-c", "import chillastic_spark.sources.es_rest"],
+        env=env, capture_output=True, text=True, timeout=120,
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    )
+    assert proc.returncode != 0
+    assert "CHILLASTIC_ES_TIMEOUT must be a finite number of seconds > 0" in proc.stderr
+
+
 # --------------------------------------------------------------- pipe
 def _reroute(dest_index):
     return SimpleNamespace(
