@@ -6,9 +6,16 @@ we wrap here so mutator authors get one import. Everything stays
 JVM-side (whole-stage codegen) — no Python UDFs in this module.
 
 A key primitive is :func:`hash60`, a deterministic 60-bit hash built
-from md5 that is *reproducible in ANSI SQL* (DuckDB oracle:
-``('0x' || substr(md5(x), 1, 15))::BIGINT``). MinHash / SimHash /
-fingerprinting all derive from it so correctness is oracle-checkable.
+from md5 that is *reproducible in ANSI SQL* (DuckDB twin:
+:func:`hash60_sql`). MinHash / SimHash / fingerprinting all derive from
+it so correctness is oracle-checkable.
+
+The word-gram decision of every curation operator (dedup,
+decontamination, repetition gates) lives here, once per engine:
+:func:`words` tokenises, :func:`gram_hashes` hashes each space-joined
+n-gram of the projected words array. Their DuckDB twins are
+:func:`words_sql`, :func:`grams_sql` and :func:`hash60_sql`; the
+distinct shingle TABLE built on top is ``operators.dedup.shingles``.
 """
 from __future__ import annotations
 
@@ -65,6 +72,11 @@ def hash60(col: Column | str) -> Column:
     """
     c = F.col(col) if isinstance(col, str) else col
     return F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("long")
+
+
+def hash60_sql(expr: str) -> str:
+    """DuckDB twin of :func:`hash60`."""
+    return f"('0x' || substr(md5({expr}), 1, 15))::BIGINT"
 
 
 def seeded_hash60(col: Column | str, seed: int) -> Column:
@@ -128,32 +140,31 @@ def words_sql(expr: str = "text") -> str:
     )
 
 
-def ngrams_of_words(w: Column, n: int) -> Column:
-    """Distinct space-joined n-grams of an ALREADY-MATERIALISED words
-    array column. Callers should project the words array in a separate
-    select first — inlining the split() subtree here makes codegen
-    re-tokenise the text once per gram (O(words²) per doc)."""
+def gram_hashes(w: Column, n: int) -> Column:
+    """hash60 of each space-joined word n-gram of an ALREADY-PROJECTED
+    words array, in order, duplicates kept; empty when size(w) < n.
+
+    Hashed inside the transform, so no gram string ever becomes a row:
+    consumers explode 8-byte longs. Project the words array in a
+    separate select first — inlining the split() subtree here makes
+    codegen re-tokenise the text once per gram (O(words²) per doc).
+    DuckDB twin: :func:`hash60_sql` over :func:`grams_sql`."""
     grams = F.transform(
         F.sequence(F.lit(1), F.size(w) - (n - 1)),
-        lambda i: F.concat_ws(" ", F.slice(w, i, n)),
+        lambda i: hash60(F.concat_ws(" ", F.slice(w, i, n))),
     )
     # sequence(1, k) DESCENDS when k < 1, so guard short docs explicitly
-    return F.array_distinct(
-        F.when(F.size(w) >= n, grams).otherwise(F.array().cast("array<string>"))
+    return F.when(F.size(w) >= n, grams).otherwise(F.array().cast("array<long>"))
+
+
+def grams_sql(w: str, n: int) -> str:
+    """DuckDB twin of the distinct gram set behind
+    ``operators.dedup.shingles``: the distinct space-joined n-grams of
+    the words list ``w`` (empty when len(w) < n)."""
+    return (
+        f"list_distinct(list_transform(range(1, greatest(len({w}) - {n - 1}, 0) + 1), "
+        f"i -> array_to_string(list_slice({w}, i, i + {n - 1}), ' ')))"
     )
-
-
-def word_ngrams(col: Column | str, n: int) -> Column:
-    """Distinct word n-gram shingles of a text column, space-joined.
-
-    Prefer projecting words() first and calling ngrams_of_words — see
-    its docstring for the codegen pitfall. The '' phantom token of
-    empty/whitespace-only text is purged first (the words() contract):
-    unfiltered, n=1 would emit [''] — an empty shingle that hashes and
-    joins like a real gram.
-    """
-    w = F.filter(words(col), lambda t: t != F.lit(""))
-    return ngrams_of_words(w, n)
 
 
 # ----------------------------------------- interpolated percentile cell

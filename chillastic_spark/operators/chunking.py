@@ -53,8 +53,8 @@ def chunk_documents(
     stride: int = 40,
 ) -> DataFrame:
     """(doc_id, chunk_idx, chunk_text, n_chunk_tokens) — one row per
-    overlapping window. Tokenise once (two-step projection, see
-    functions.ngrams_of_words), then posexplode the window array.
+    overlapping window. Tokenise once (two-step projection), then
+    posexplode the window array.
 
     Token-less docs (NULL/empty/whitespace-only text) emit NO chunks —
     the token_count()=0 convention, and what the UDTF twin does. The

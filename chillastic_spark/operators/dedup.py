@@ -118,16 +118,7 @@ def winnow_fingerprints(
     a sub-linear sketch that still localises matches).
     """
     w = df.select(F.col(id_col).alias("doc_id"), CF.words(text_col).alias("__w"))
-    grams = F.transform(
-        F.sequence(F.lit(1), F.size("__w") - (k - 1)),
-        lambda i: CF.hash60(F.concat_ws(" ", F.slice(F.col("__w"), i, k))),
-    )
-    g = w.select(
-        "doc_id",
-        F.when(F.size("__w") >= k, grams)
-        .otherwise(F.array().cast("array<long>"))
-        .alias("__g"),
-    )
+    g = w.select("doc_id", CF.gram_hashes(F.col("__w"), k).alias("__g"))
     mins = F.transform(
         F.sequence(F.lit(1), F.size("__g") - (window - 1)),
         lambda j: F.array_min(F.slice(F.col("__g"), j, window)),
@@ -190,19 +181,9 @@ def substring_dup_stats(
     shuffle volume O(corpus tokens), never pairwise.
     """
     w = df.select(F.col(id_col).alias("doc_id"), CF.words(text_col).alias("__w"))
-    grams = F.transform(
-        F.sequence(F.lit(1), F.size("__w") - (window - 1)),
-        lambda i: F.concat_ws(" ", F.slice(F.col("__w"), i, window)),
+    g = materialize(
+        w.select("doc_id", F.explode(CF.gram_hashes(F.col("__w"), window)).alias("wh"))
     )
-    wins = w.select(
-        "doc_id",
-        F.explode(
-            F.when(F.size("__w") >= window, grams).otherwise(
-                F.array().cast("array<string>")
-            )
-        ).alias("win"),
-    )
-    g = materialize(wins.select("doc_id", CF.hash60("win").alias("wh")))
     cnt = g.groupBy("wh").agg(F.count("*").alias("cnt"))
     # ONE per-doc aggregation over the count-annotated window table:
     # the old shape ran totals and dups as separate doc_id shuffles and
@@ -230,10 +211,15 @@ def substring_dup_stats(
 
 def shingles(df: DataFrame, id_col: str, text_col: str, n: int = 3,
              extra_cols: list[str] | None = None) -> DataFrame:
-    """(id, gram) exploded distinct word-n-gram shingles.
+    """(doc_id, *extra_cols, gh): the distinct word-n-gram shingles of
+    each doc, hashed to 60-bit longs — THE shingle table of every
+    set-similarity operator (join/minhash currency: long arithmetic,
+    cheap shuffles, no string compares). DuckDB twin:
+    ``hash60_sql(unnest(grams_sql(words_sql(text), n)))``.
 
-    Two-step projection: tokenise once into a words column, THEN build
-    grams — keeps codegen from re-splitting the text per gram.
+    Two-step projection: tokenise once into a words column, THEN hash
+    grams (functions.gram_hashes) — keeps codegen from re-splitting the
+    text per gram, and no gram string ever becomes a row.
     """
     extra = list(extra_cols or [])
     w = df.select(
@@ -241,16 +227,8 @@ def shingles(df: DataFrame, id_col: str, text_col: str, n: int = 3,
         CF.words(text_col).alias("__w"),
     )
     return w.select(
-        "doc_id", *extra, F.explode(CF.ngrams_of_words(F.col("__w"), n)).alias("gram")
-    )
-
-
-def hashed_shingles(df: DataFrame, id_col: str, text_col: str, n: int = 3) -> DataFrame:
-    """(id, gh) shingles hashed ONCE to a 60-bit long — the join/minhash
-    currency. One md5 per gram; everything downstream is long
-    arithmetic (cheap shuffles, no string compares)."""
-    return shingles(df, id_col, text_col, n).select(
-        "doc_id", CF.hash60("gram").alias("gh")
+        "doc_id", *extra,
+        F.explode(F.array_distinct(CF.gram_hashes(F.col("__w"), n))).alias("gh"),
     )
 
 
@@ -269,6 +247,29 @@ class HotGramSkewWarning(UserWarning):
 _HOT_GRAM_WARN_FRAC = 0.2
 
 
+def _hot_gram_knobs() -> "tuple[bool, float]":
+    """(preflight on, warn fraction) from ``CHILLASTIC_HOT_GRAM_PREFLIGHT``
+    (0 or 1, default 1) and ``CHILLASTIC_HOT_GRAM_WARN_FRAC`` (finite,
+    in (0, 1], default 0.2), read at call time. A malformed value
+    raises a ValueError naming the variable and its range."""
+    on = os.environ.get("CHILLASTIC_HOT_GRAM_PREFLIGHT", "1")
+    if on not in ("0", "1"):
+        raise ValueError(
+            f"CHILLASTIC_HOT_GRAM_PREFLIGHT must be 0 or 1 (got {on!r})"
+        )
+    raw = os.environ.get("CHILLASTIC_HOT_GRAM_WARN_FRAC", str(_HOT_GRAM_WARN_FRAC))
+    try:
+        frac = float(raw)
+    except ValueError:
+        frac = float("nan")
+    if not 0 < frac <= 1:  # NaN fails both comparisons
+        raise ValueError(
+            "CHILLASTIC_HOT_GRAM_WARN_FRAC must be a finite number in (0, 1] "
+            f"(got {raw!r})"
+        )
+    return on == "1", frac
+
+
 # Most recent preflight verdicts (bounded ring, newest last) — the
 # operator-visible record of every guard run, hot or benign, surfaced
 # through maintenance.store_health_report / GET /stores/health (r9
@@ -280,8 +281,8 @@ PREFLIGHT_VERDICTS: "deque[dict]" = deque(maxlen=16)
 def _hot_gram_preflight(
     g: DataFrame,
     strict: bool,
+    warn_frac: float,
     sizes: "DataFrame | None" = None,
-    warn_frac: "float | None" = None,
 ) -> None:
     """Document-frequency preflight over the gram index (r8 verdict
     #2): warn (or raise, with ``strict=True``) when the hottest gram
@@ -300,14 +301,8 @@ def _hot_gram_preflight(
     (BENCH_AB_r09 measured those at +0.5–0.8s on the sf0.1 jaccard
     headliner).
 
-    Disable with CHILLASTIC_HOT_GRAM_PREFLIGHT=0; tune the trigger
-    with CHILLASTIC_HOT_GRAM_WARN_FRAC."""
-    if os.environ.get("CHILLASTIC_HOT_GRAM_PREFLIGHT", "1") == "0":
-        return
-    if warn_frac is None:
-        warn_frac = float(
-            os.environ.get("CHILLASTIC_HOT_GRAM_WARN_FRAC", _HOT_GRAM_WARN_FRAC)
-        )
+    The caller reads ``warn_frac`` and the on/off switch through
+    :func:`_hot_gram_knobs`."""
     nd_src = sizes if sizes is not None else g
     n_docs = nd_src.agg(F.countDistinct("doc_id").alias("nd")).collect()[0]["nd"]
     if not n_docs:
@@ -400,9 +395,7 @@ def ngram_jaccard_pairs(
     raise with ``strict=True``) — semantics untouched.
     """
     keys = list(partition_cols or [])
-    g = shingles(df, id_col, text_col, n, extra_cols=keys).withColumn(
-        "gh", CF.hash60("gram")
-    ).drop("gram")
+    g = shingles(df, id_col, text_col, n, extra_cols=keys)
     if max_doc_frac is not None:
         g = cap_hot_grams(g, df, max_doc_frac)
     return _pair_scores(
@@ -433,9 +426,7 @@ def _pair_scores(
     apply to one measure and silently diverge in the other.
     ``score_of(common, sz_a, sz_b) -> Column`` supplies the formula."""
     keys = list(keys or [])
-    run_preflight = preflight and os.environ.get(
-        "CHILLASTIC_HOT_GRAM_PREFLIGHT", "1"
-    ) != "0"
+    run_preflight, warn_frac = _hot_gram_knobs() if preflight else (False, 0.0)
     # the shingle table feeds three consumers (both join sides + sizes);
     # materialise it once instead of re-tokenising per consumer — at
     # cluster scale this is a persist/checkpoint of the inverted index.
@@ -448,7 +439,7 @@ def _pair_scores(
     sizes = g.groupBy("doc_id", *keys).agg(F.count("*").alias("sz"))
     if run_preflight:
         sizes = materialize(sizes, eager=False)
-        _hot_gram_preflight(g, strict, sizes=sizes)
+        _hot_gram_preflight(g, strict, warn_frac, sizes=sizes)
     a, b = g.alias("a"), g.alias("b")
     cond = (F.col("a.gh") == F.col("b.gh")) & (F.col("a.doc_id") < F.col("b.doc_id"))
     for k in keys:
@@ -497,7 +488,7 @@ def ngram_containment_pairs(
     Reference analog: the dedup surface (SURVEY.md §2 training-data
     extensions); containment is the standard companion measure.
     """
-    g = hashed_shingles(df, id_col, text_col, n)
+    g = shingles(df, id_col, text_col, n)
     if max_doc_frac is not None:
         g = cap_hot_grams(g, df, max_doc_frac)
     return _pair_scores(
@@ -537,7 +528,7 @@ def _prefix_index(
     that doc's prefix."""
     from pyspark.sql.window import Window
 
-    g = materialize(hashed_shingles(df, id_col, text_col, n))
+    g = materialize(shingles(df, id_col, text_col, n))
     sizes = g.groupBy("doc_id").agg(F.count("*").alias("sz"))
     freq = g.groupBy("gh").agg(F.count("*").alias("dfct"))
     pos = F.row_number().over(
@@ -779,7 +770,7 @@ def minhash_signatures_wide(
     min, no seed explosion. This is the 100 TB formulation: shuffle
     volume = num_perm longs per doc.
     """
-    g = hashed_shingles(df, id_col, text_col, n)
+    g = shingles(df, id_col, text_col, n)
     return g.groupBy("doc_id").agg(*minhash_min_aggs(num_perm))
 
 
@@ -895,9 +886,7 @@ def minhash_lsh_incremental(
     flagged = df.withColumn(
         "__inc", F.coalesce(incoming.cast("boolean"), F.lit(False))
     )
-    g = shingles(flagged, id_col, text_col, n, extra_cols=["__inc"]).select(
-        "doc_id", "__inc", CF.hash60("gram").alias("gh")
-    )
+    g = shingles(flagged, id_col, text_col, n, extra_cols=["__inc"])
     sig = materialize(
         g.groupBy("doc_id", "__inc").agg(*minhash_min_aggs(num_perm))
     )

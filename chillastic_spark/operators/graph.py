@@ -238,7 +238,7 @@ def label_propagation(
     # batched 6.29/5.17/6.92s vs per-round 5.24/4.83/6.54s. The lazy
     # setup pin above still saves its separate materialization job
     # (round 1 computes it).
-    pending: "list[DataFrame]" = []
+    prev: "DataFrame | None" = None
     for i in range(iters):
         votes = (
             und.join(
@@ -259,14 +259,10 @@ def label_propagation(
             )
             .select("node", F.col("s.lb").alias("label"))
         )
-        sync = True
-        labels = materialize(labels, iterative=True, eager=sync)
-        if sync:
-            for p in pending:
-                release(p)
-            pending = [labels]
-        else:
-            pending.append(labels)
+        labels = materialize(labels, iterative=True, eager=True)
+        if prev is not None:
+            release(prev)  # the new round is already materialized
+        prev = labels
     # the undirected edge pin feeds nothing once the final labels
     # checkpoint exists — unreleased it leaked per call (pagerank rule)
     release(und)

@@ -157,7 +157,7 @@ def dsir_weights_sql(
 WITH toks AS (
   SELECT doc_id{ex_sel}, tgt,
          CASE WHEN tok = '' THEN NULL
-              ELSE ('0x' || substr(md5(tok), 1, 15))::BIGINT % {buckets}
+              ELSE {CF.hash60_sql("tok")} % {buckets}
          END AS bkt
   FROM (SELECT doc_id{ex_sel}, ({target_sql}) AS tgt,
                unnest(coalesce({CF.words_sql('text')}, [''])) AS tok

@@ -40,7 +40,7 @@ def _bigram_stream(
     """(doc_id, pb, bb) per bigram occurrence: hashed buckets of the
     context token and of the bigram. Narrow (per-row array expansion);
     the words array is projected once so codegen doesn't re-tokenise
-    per bigram (the ngrams_of_words caveat)."""
+    per bigram."""
     base = df.select(
         F.col(id_col).alias("doc_id"), CF.words(text_col).alias("__w")
     )
@@ -180,10 +180,9 @@ def bigram_nll_sql(
     rounding, DECIMAL summation, and the identical MARKER-ROW shape
     (docs with < 2 tokens keep one NULL-bucket row through the
     aggregate; no table rejoin — the dsir_weights_sql convention)."""
-    w = f"regexp_split_to_array(trim({text_col}, (' ' || chr(9) || chr(10) || chr(11) || chr(12) || chr(13))), '[ \\t\\n\\x0b\\f\\r]+')"
-    h = "('0x' || substr(md5({e}), 1, 15))::BIGINT"
-    prev_h = h.format(e="p.prev")
-    big_h = h.format(e="p.prev || ' ' || p.cur")
+    w = CF.words_sql(text_col)
+    prev_h = CF.hash60_sql("p.prev")
+    big_h = CF.hash60_sql("p.prev || ' ' || p.cur")
     return f"""
 WITH toks AS (
   SELECT {id_col} AS doc_id,
@@ -312,8 +311,8 @@ def linear_quality_sql(
     summation, and the identical MARKER-ROW shape (token-less docs keep
     one NULL row through the aggregate; no table rejoin — the
     dsir_weights_sql convention)."""
-    w = f"regexp_split_to_array(trim({text_col}, (' ' || chr(9) || chr(10) || chr(11) || chr(12) || chr(13))), '[ \\t\\n\\x0b\\f\\r]+')"
-    h = "('0x' || substr(md5(tok || '#qc'), 1, 15))::BIGINT"
+    w = CF.words_sql(text_col)
+    h = CF.hash60_sql("tok || '#qc'")
     return f"""
 WITH toks AS (
   SELECT {id_col} AS doc_id, unnest(coalesce({w}, [''])) AS tok FROM {table}

@@ -7,7 +7,7 @@ Each has a matching ANSI-SQL oracle in chillastic_spark.queries.
 Every function takes an optional pre-tokenised words-array column
 ``w``; pass one (projected ONCE) when combining several features —
 inlining the split() per feature makes codegen re-tokenise the text
-for each (see functions.ngrams_of_words docstring).
+for each.
 """
 from __future__ import annotations
 

@@ -168,10 +168,8 @@ def curate(
         # top-token pass (one map-side-combining agg)
         from chillastic_spark import functions as CF
 
-        # project the words array FIRST: inlining the split() subtree
-        # into ngrams_of_words makes codegen re-tokenise the text once
-        # per gram — O(words²) per doc (functions.ngrams_of_words's own
-        # documented caveat)
+        # project the words array FIRST (the functions.gram_hashes
+        # codegen caveat)
         gated = (
             gated.withColumn("__w", CF.words(F.col(text_col)))
             .withColumn(
@@ -179,7 +177,7 @@ def curate(
                 F.when(
                     F.size("__w") >= 2,
                     F.lit(1.0)
-                    - F.size(CF.ngrams_of_words(F.col("__w"), 2))
+                    - F.size(F.array_distinct(CF.gram_hashes(F.col("__w"), 2)))
                     / (F.size("__w") - 1).cast("double"),
                 ).otherwise(F.lit(0.0)),
             )
@@ -223,34 +221,16 @@ def curate(
         # (broadcast semi-join; the corpus side never shuffles)
         from chillastic_spark import functions as CF
 
-        def _grams(frame: DataFrame, idc: str) -> DataFrame:
-            # two-step projection (words array first) — see the
-            # dup-bigram gate note: inlining split() into the gram
-            # transform is O(words²) per doc
-            # idc=None: gram-set only (the benchmark side needs no id —
-            # fabricating one from a positional first column dragged an
-            # arbitrary, possibly huge, column through the explode)
-            ids = [F.col(idc).alias("__gid")] if idc is not None else []
-            keep = ["__gid"] if idc is not None else []
-            return (
-                frame.select(
-                    *ids,
-                    CF.words(F.col(text_col)).alias("__gw"),
-                )
-                .select(
-                    *keep,
-                    F.explode(
-                        CF.ngrams_of_words(F.col("__gw"), cfg.decontaminate_n)
-                    ).alias("__g"),
-                )
-                .select(*keep, CF.hash60("__g").alias("__gh"))
-            )
-
-        bench_grams = _grams(benchmark, None).select("__gh").distinct()
+        # the benchmark side needs only its gram-hash set, no id column
+        bench_grams = (
+            benchmark.select(CF.words(F.col(text_col)).alias("__w"))
+            .select(F.explode(CF.gram_hashes(F.col("__w"), cfg.decontaminate_n)).alias("gh"))
+            .distinct()
+        )
         tainted = (
-            _grams(gated, id_col)
-            .join(F.broadcast(bench_grams), "__gh")
-            .select(F.col("__gid").alias(id_col))
+            D.shingles(gated, id_col, text_col, cfg.decontaminate_n)
+            .join(F.broadcast(bench_grams), "gh")
+            .select(F.col("doc_id").alias(id_col))
             .distinct()
         )
         gated = gated.join(tainted, id_col, "left_anti")

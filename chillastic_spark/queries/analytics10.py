@@ -33,10 +33,8 @@ from chillastic_spark import functions as CF
 from chillastic_spark.operators import dedup as D
 from chillastic_spark.operators import text as T
 from chillastic_spark.queries import Query
-from chillastic_spark.queries.documents import _GRAMS
 from chillastic_spark.tables import load
 
-_H60 = "('0x' || substr(md5({expr}), 1, 15))::BIGINT"
 _W_DOC = CF.words_sql("text")
 
 # SQL twin of the pair → component pipeline (shared with the
@@ -49,8 +47,8 @@ _W_DOC = CF.words_sql("text")
 def _components_cte(where: str = "") -> str:
     return f"""
 g AS (
-  SELECT doc_id, {_H60.format(expr="gram")} AS gh
-  FROM (SELECT doc_id, unnest({_GRAMS}) AS gram FROM documents{where})
+  SELECT doc_id, {CF.hash60_sql("gram")} AS gh
+  FROM (SELECT doc_id, unnest({CF.grams_sql(_W_DOC, 3)}) AS gram FROM documents{where})
 ), sz AS (
   SELECT doc_id, count(*) AS sz FROM g GROUP BY doc_id
 ), c AS (
@@ -113,9 +111,9 @@ WITH RECURSIVE {_COMPONENTS_CTE}
 SELECT d.doc_id, d.source,
   coalesce(comp.component, d.doc_id) AS rep_id,
   CASE
-    WHEN {_H60.format(expr="coalesce(comp.component, d.doc_id)::VARCHAR || '#split'")} % 100
+    WHEN {CF.hash60_sql("coalesce(comp.component, d.doc_id)::VARCHAR || '#split'")} % 100
       < {TRAIN_PCT} THEN 'train'
-    WHEN {_H60.format(expr="coalesce(comp.component, d.doc_id)::VARCHAR || '#split'")} % 100
+    WHEN {CF.hash60_sql("coalesce(comp.component, d.doc_id)::VARCHAR || '#split'")} % 100
       < {TRAIN_PCT + VAL_PCT} THEN 'val'
     ELSE 'test'
   END AS split
@@ -203,15 +201,15 @@ WITH RECURSIVE {_COMPONENTS_CTE},
 splits AS (
   SELECT d.doc_id,
     CASE
-      WHEN {_H60.format(expr="coalesce(comp.component, d.doc_id)::VARCHAR || '#split'")} % 100
+      WHEN {CF.hash60_sql("coalesce(comp.component, d.doc_id)::VARCHAR || '#split'")} % 100
         < {TRAIN_PCT} THEN 'train'
-      WHEN {_H60.format(expr="coalesce(comp.component, d.doc_id)::VARCHAR || '#split'")} % 100
+      WHEN {CF.hash60_sql("coalesce(comp.component, d.doc_id)::VARCHAR || '#split'")} % 100
         < {TRAIN_PCT + VAL_PCT} THEN 'val'
       ELSE 'test'
     END AS split
   FROM documents d LEFT JOIN comp ON d.doc_id = comp.doc_id)
 SELECT s.split,
-  {_H60.format(expr="d.doc_id::VARCHAR || '#shard'")} % {N_SHARDS} AS shard,
+  {CF.hash60_sql("d.doc_id::VARCHAR || '#shard'")} % {N_SHARDS} AS shard,
   count(*) AS n_docs,
   sum(len(list_filter({_W_DOC}, x -> x != '')))::BIGINT AS n_tokens
 FROM splits s JOIN documents d ON s.doc_id = d.doc_id
@@ -252,7 +250,7 @@ def _splits_incremental_sql() -> str:
 
     comp = _components_cte(" WHERE doc_id % 3 <> 0")
     flags = _incremental_sql().strip().removeprefix("WITH").strip()
-    split_h = _H60.format(expr="rep_id::VARCHAR || '#split'")
+    split_h = CF.hash60_sql("a.rep_id::VARCHAR || '#split'")
     return f"""
 WITH RECURSIVE {comp},
 ex_manifest AS (
@@ -271,11 +269,11 @@ ex_manifest AS (
 )
 SELECT a.doc_id, a.source, a.rep_id,
   CASE
-    WHEN {split_h.replace("rep_id", "a.rep_id")} % 100 < {TRAIN_PCT} THEN 'train'
-    WHEN {split_h.replace("rep_id", "a.rep_id")} % 100 < {TRAIN_PCT + VAL_PCT} THEN 'val'
+    WHEN {split_h} % 100 < {TRAIN_PCT} THEN 'train'
+    WHEN {split_h} % 100 < {TRAIN_PCT + VAL_PCT} THEN 'val'
     ELSE 'test'
   END AS split,
-  {_H60.format(expr="a.doc_id::VARCHAR || '#shard'")} % {N_SHARDS} AS shard
+  {CF.hash60_sql("a.doc_id::VARCHAR || '#shard'")} % {N_SHARDS} AS shard
 FROM assigned a
 """
 

@@ -318,7 +318,7 @@ def _drift_sql(term_tpl: str, out_name: str) -> str:
     term = CF.round_det_sql(term_tpl.format(p=p, q=q), _KL_TERM_DIGITS)
     return f"""
 WITH toks AS (
-  SELECT source, ('0x' || substr(md5(tok), 1, 15))::BIGINT % {b} AS bkt
+  SELECT source, {CF.hash60_sql("tok")} % {b} AS bkt
   FROM (SELECT source, unnest({CF.words_sql('text')}) AS tok
         FROM documents)
   WHERE tok != ''
@@ -386,15 +386,8 @@ def source_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.countDistinct("tok").alias("distinct_tokens"),
         )
     )
-    grams_col = F.when(
-        F.size("w") >= 3,
-        F.transform(
-            F.sequence(F.lit(1), F.size("w") - 2),
-            lambda i: F.concat_ws(" ", F.slice("w", i, 3)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
     grams = (
-        w.select("source", F.explode(grams_col).alias("gm"))
+        w.select("source", F.explode(CF.gram_hashes(F.col("w"), 3)).alias("gm"))
         .groupBy("source")
         .agg(
             F.count(F.lit(1)).alias("n_grams"),

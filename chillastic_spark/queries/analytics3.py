@@ -20,11 +20,11 @@ from pyspark.sql.window import Window
 
 from chillastic_spark import functions as CF
 from chillastic_spark.operators import text as T
+from chillastic_spark.operators.dedup import shingles
 from chillastic_spark.queries import Query
 from chillastic_spark.queries.documents import TEXT_FEATURES_SQL
 from chillastic_spark.tables import load
 
-_H60 = "('0x' || substr(md5({expr}), 1, 15))::BIGINT"
 _W = CF.words_sql("text")
 
 
@@ -61,7 +61,7 @@ _RATE_SQL = "CASE " + " ".join(
 SAMPLE_STRATIFIED_SQL = f"""
 SELECT doc_id, lang, source
 FROM documents
-WHERE {_H60.format(expr="doc_id::VARCHAR || '#sample'")} % 100 < {_RATE_SQL}
+WHERE {CF.hash60_sql("doc_id::VARCHAR || '#sample'")} % 100 < {_RATE_SQL}
 """
 
 
@@ -195,7 +195,7 @@ FROM documents GROUP BY lang
 def token_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus length-distribution: doc counts per 32-token bucket.
     One shuffle on a tiny key domain; the words array is materialised
-    once before size() (codegen pitfall — see functions.ngrams_of_words).
+    once before size() so codegen does not re-tokenise per use.
     """
     d = load(spark, sf_dir, "documents")
     toks = d.select("lang", CF.words("text").alias("w"))
@@ -282,14 +282,8 @@ def decontaminate_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     is_bench = (
         CF.hash60(F.concat(F.col("doc_id").cast("string"), F.lit("#bench"))) % 100
     ) < 5
-    grams = (
-        d.select("doc_id", is_bench.alias("is_bench"), CF.words("text").alias("w"))
-        .select(
-            "doc_id",
-            "is_bench",
-            F.explode(CF.ngrams_of_words(F.col("w"), 5)).alias("gram"),
-        )
-        .select("doc_id", "is_bench", CF.hash60("gram").alias("gh"))
+    grams = shingles(
+        d.withColumn("is_bench", is_bench), "doc_id", "text", 5, extra_cols=["is_bench"]
     )
     bench_grams = grams.filter(F.col("is_bench")).select("gh").distinct()
     return (
@@ -300,18 +294,13 @@ def decontaminate_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_G5 = (
-    f"list_distinct(list_transform(range(1, greatest(len({_W}) - 4, 0) + 1), "
-    f"i -> array_to_string(list_slice({_W}, i, i + 4), ' ')))"
-)
-
 DECONTAMINATE_SQL = f"""
 WITH bench AS (
   SELECT doc_id FROM documents
-  WHERE {_H60.format(expr="doc_id::VARCHAR || '#bench'")} % 100 < 5
+  WHERE {CF.hash60_sql("doc_id::VARCHAR || '#bench'")} % 100 < 5
 ), g AS (
-  SELECT doc_id, ('0x' || substr(md5(gram), 1, 15))::BIGINT AS gh
-  FROM (SELECT doc_id, unnest({_G5}) AS gram FROM documents)
+  SELECT doc_id, {CF.hash60_sql("gram")} AS gh
+  FROM (SELECT doc_id, unnest({CF.grams_sql(_W, 5)}) AS gram FROM documents)
 ), bg AS (
   SELECT DISTINCT gh FROM g JOIN bench USING (doc_id)
 )
@@ -399,7 +388,7 @@ def repetition_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     arr = w.select(
         "doc_id",
         F.size("w").alias("n_tok"),
-        F.size(CF.ngrams_of_words(F.col("w"), 2)).alias("n_distinct_bi"),
+        F.size(F.array_distinct(CF.gram_hashes(F.col("w"), 2))).alias("n_distinct_bi"),
     )
     dup = arr.filter(F.col("n_tok") >= 2).select(
         "doc_id",
@@ -428,14 +417,9 @@ def repetition_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_BI = (
-    f"list_distinct(list_transform(range(1, greatest(len({_W}) - 1, 0) + 1), "
-    f"i -> array_to_string(list_slice({_W}, i, i + 1), ' ')))"
-)
-
 REPETITION_SQL = f"""
 WITH w AS (
-  SELECT doc_id, {_W} AS w, len({_W}) AS n_tok, len({_BI}) AS n_distinct_bi
+  SELECT doc_id, {_W} AS w, len({_W}) AS n_tok, len({CF.grams_sql(_W, 2)}) AS n_distinct_bi
   FROM documents),
 tok AS (
   SELECT doc_id, max(c) AS max_tok FROM (

@@ -411,14 +411,12 @@ def dedup_containment_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     return D.ngram_containment_pairs_prefix(d, n=3, threshold=0.9)
 
 
-# Shares the gram expression with DEDUP_NGRAM_SQL (queries/documents.py);
+# Shares the gram table with DEDUP_NGRAM_SQL (queries/documents.py);
 # the scoring line is the only difference: common / min(|A|, |B|).
-from chillastic_spark.queries.documents import _GRAMS  # noqa: E402
-
 DEDUP_CONTAINMENT_SQL = f"""
 WITH g AS (
-  SELECT doc_id, ('0x' || substr(md5(gram), 1, 15))::BIGINT AS gh
-  FROM (SELECT doc_id, unnest({_GRAMS}) AS gram FROM documents)
+  SELECT doc_id, {CF.hash60_sql("gram")} AS gh
+  FROM (SELECT doc_id, unnest({CF.grams_sql(CF.words_sql('text'), 3)}) AS gram FROM documents)
 ), sz AS (
   SELECT doc_id, count(*) AS sz FROM g GROUP BY doc_id
 ), c AS (

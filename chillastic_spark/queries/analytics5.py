@@ -147,8 +147,8 @@ def dataset_split_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 DATASET_SPLIT_SQL = f"""
 SELECT CASE
-         WHEN ('0x' || substr(md5(doc_id::VARCHAR || '#split'), 1, 15))::BIGINT % 100 < {SPLIT_BOUNDS[0]} THEN 'train'
-         WHEN ('0x' || substr(md5(doc_id::VARCHAR || '#split'), 1, 15))::BIGINT % 100 < {SPLIT_BOUNDS[1]} THEN 'val'
+         WHEN {CF.hash60_sql("doc_id::VARCHAR || '#split'")} % 100 < {SPLIT_BOUNDS[0]} THEN 'train'
+         WHEN {CF.hash60_sql("doc_id::VARCHAR || '#split'")} % 100 < {SPLIT_BOUNDS[1]} THEN 'val'
          ELSE 'test'
        END AS split,
        lang, count(*) AS n_docs, sum(n_chars)::BIGINT AS total_chars

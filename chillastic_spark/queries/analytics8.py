@@ -37,7 +37,7 @@ from chillastic_spark.operators import text as T
 from chillastic_spark.operators.components import connected_components, duplicate_clusters
 from chillastic_spark.operators.scrub import SCRUB_RULES, scrub_text
 from chillastic_spark.queries import Query
-from chillastic_spark.queries.documents import _GRAMS, QUALITY_EXPR_SQL
+from chillastic_spark.queries.documents import QUALITY_EXPR_SQL
 from chillastic_spark.tables import load
 
 # ------------------------------------------------------- PII scrub audit
@@ -261,15 +261,13 @@ def mixture_sample_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_H60_MIX = "('0x' || substr(md5({expr}), 1, 15))::BIGINT"
-
 MIXTURE_SAMPLE_SQL = f"""
 WITH plan AS ({MIXTURE_SQL}),
 kept AS (
   SELECT d.source, count(*) AS kept_docs,
          sum(len({CF.words_sql('d.text')}))::BIGINT AS kept_tokens
   FROM documents d JOIN plan p ON d.source = p.source
-  WHERE {_H60_MIX.format(expr="d.doc_id::VARCHAR || '#mix'")} % 1000000
+  WHERE {CF.hash60_sql("d.doc_id::VARCHAR || '#mix'")} % 1000000
         < floor(p.sample_rate * 1000000.0 + 0.5)::BIGINT
   GROUP BY d.source)
 SELECT p.source, p.sample_rate,
@@ -313,8 +311,8 @@ def dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 KEEP_BEST_SQL = f"""
 WITH RECURSIVE g AS (
-  SELECT doc_id, ('0x' || substr(md5(gram), 1, 15))::BIGINT AS gh
-  FROM (SELECT doc_id, unnest({_GRAMS}) AS gram FROM documents)
+  SELECT doc_id, {CF.hash60_sql("gram")} AS gh
+  FROM (SELECT doc_id, unnest({CF.grams_sql(CF.words_sql('text'), 3)}) AS gram FROM documents)
 ), sz AS (
   SELECT doc_id, count(*) AS sz FROM g GROUP BY doc_id
 ), c AS (
@@ -385,8 +383,8 @@ def _incremental_sql(num_perm: int = 16, bands: int = 4, threshold: float = 0.25
     est = f"floor((({eq_sum}) / {float(num_perm)}) * 10000.0 + 0.5) / 10000.0"
     return f"""
 WITH g AS (
-  SELECT doc_id, ('0x' || substr(md5(gram), 1, 15))::BIGINT AS gh
-  FROM (SELECT doc_id, unnest({_GRAMS}) AS gram FROM documents)
+  SELECT doc_id, {CF.hash60_sql("gram")} AS gh
+  FROM (SELECT doc_id, unnest({CF.grams_sql(CF.words_sql('text'), 3)}) AS gram FROM documents)
 ), sig AS (
   SELECT doc_id,
     {mh_cols}

@@ -89,12 +89,6 @@ FROM documents GROUP BY 1 HAVING count(*) > 1
 
 # ------------------------------------------------------ n-gram Jaccard dups
 
-_GRAMS = (
-    f"list_distinct(list_transform(range(1, greatest(len({_W}) - 2, 0) + 1), "
-    f"i -> array_to_string(list_slice({_W}, i, i + 2), ' ')))"
-)
-
-
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents")
     return D.ngram_jaccard_pairs(d, n=3, threshold=0.5)
@@ -131,8 +125,8 @@ def dedup_jaccard_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 DEDUP_NGRAM_SQL = f"""
 WITH g AS (
-  SELECT doc_id, ('0x' || substr(md5(gram), 1, 15))::BIGINT AS gh
-  FROM (SELECT doc_id, unnest({_GRAMS}) AS gram FROM documents)
+  SELECT doc_id, {CF.hash60_sql("gram")} AS gh
+  FROM (SELECT doc_id, unnest({CF.grams_sql(_W, 3)}) AS gram FROM documents)
 ), sz AS (
   SELECT doc_id, count(*) AS sz FROM g GROUP BY doc_id
 ), c AS (
@@ -152,8 +146,8 @@ WHERE floor((common / (sa.sz + sb.sz - common)) * 10000.0 + 0.5) / 10000.0 >= 0.
 # count(*) per gh IS document frequency (shingles are distinct-per-doc)
 DEDUP_NGRAM_CAPPED_SQL = f"""
 WITH g0 AS (
-  SELECT doc_id, ('0x' || substr(md5(gram), 1, 15))::BIGINT AS gh
-  FROM (SELECT doc_id, unnest({_GRAMS}) AS gram FROM documents)
+  SELECT doc_id, {CF.hash60_sql("gram")} AS gh
+  FROM (SELECT doc_id, unnest({CF.grams_sql(_W, 3)}) AS gram FROM documents)
 ), nd AS (
   SELECT count(*) AS n FROM documents
 ), g AS (
@@ -208,8 +202,8 @@ def _minhash_sql(num_perm: int = _NUM_PERM, bands: int = 4, threshold: float = 0
     )
     return f"""
 WITH g AS (
-  SELECT doc_id, ('0x' || substr(md5(gram), 1, 15))::BIGINT AS gh
-  FROM (SELECT doc_id, unnest({_GRAMS}) AS gram FROM documents)
+  SELECT doc_id, {CF.hash60_sql("gram")} AS gh
+  FROM (SELECT doc_id, unnest({CF.grams_sql(_W, 3)}) AS gram FROM documents)
 ), sig AS (
   SELECT doc_id,
     {mh_cols}
@@ -256,7 +250,7 @@ WITH toks AS (
   SELECT doc_id, unnest(coalesce({_W}, [''])) AS tok FROM documents
 ), h AS (
   SELECT doc_id, CASE WHEN tok = '' THEN NULL
-                      ELSE ('0x' || substr(md5(tok), 1, 15))::BIGINT
+                      ELSE {CF.hash60_sql("tok")}
                  END AS h
   FROM toks
 ), b AS (
@@ -352,11 +346,11 @@ def multimodal_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-MULTIMODAL_META_SQL = """
+MULTIMODAL_META_SQL = f"""
 SELECT doc_id,
   octet_length(encode(text)) AS n_bytes,
-  ('0x' || substr(md5(text), 1, 15))::BIGINT % 1280 AS fake_width,
-  ('0x' || substr(md5(text), 1, 15))::BIGINT % 720 AS fake_height
+  {CF.hash60_sql("text")} % 1280 AS fake_width,
+  {CF.hash60_sql("text")} % 720 AS fake_height
 FROM documents
 """
 
@@ -399,8 +393,8 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 DEDUP_CLUSTERS_SQL = f"""
 WITH RECURSIVE g AS (
-  SELECT doc_id, ('0x' || substr(md5(gram), 1, 15))::BIGINT AS gh
-  FROM (SELECT doc_id, unnest({_GRAMS}) AS gram FROM documents)
+  SELECT doc_id, {CF.hash60_sql("gram")} AS gh
+  FROM (SELECT doc_id, unnest({CF.grams_sql(_W, 3)}) AS gram FROM documents)
 ), sz AS (
   SELECT doc_id, count(*) AS sz FROM g GROUP BY doc_id
 ), c AS (
@@ -445,7 +439,7 @@ g AS (
   SELECT doc_id,
     CASE WHEN len(w) >= {_WK}
       THEN list_transform(range(1, len(w) - {_WK - 1} + 1),
-           i -> ('0x' || substr(md5(array_to_string(w[i:i+{_WK - 1}], ' ')), 1, 15))::BIGINT)
+           i -> {CF.hash60_sql(f"array_to_string(w[i:i+{_WK - 1}], ' ')")})
       ELSE []::BIGINT[] END AS gh
   FROM t),
 fps AS (
@@ -477,7 +471,7 @@ SUBSTRING_SPANS_SQL = f"""
 WITH t AS (SELECT doc_id, {_W} AS w FROM documents),
 wins AS (
   SELECT doc_id,
-         ('0x' || substr(md5(array_to_string(w[i:i+{_SUBSTR_W - 1}], ' ')), 1, 15))::BIGINT AS wh
+         {CF.hash60_sql(f"array_to_string(w[i:i+{_SUBSTR_W - 1}], ' ')")} AS wh
   FROM t, unnest(range(1, len(w) - {_SUBSTR_W - 1} + 1)) AS u(i)
   WHERE len(w) >= {_SUBSTR_W}),
 dup AS (SELECT wh FROM wins GROUP BY wh HAVING count(*) > 1),

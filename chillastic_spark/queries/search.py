@@ -332,7 +332,7 @@ def phrase_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     with ZERO shuffle: adjacency is checked inside the token array
     (filter over an index sequence), so 100 TB of text phrase-matches
     in the scan stage. The words array is materialised before the
-    lambda (codegen pitfall, functions.ngrams_of_words).
+    lambda so codegen does not re-tokenise per index.
 
     r10 optimization (guide §1.2 "don't compute things you throw
     away"): the O(tokens) exact counter is evaluated twice per row

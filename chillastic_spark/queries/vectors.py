@@ -14,9 +14,6 @@ from chillastic_spark.tables import load
 # on a zero-norm vector while the Spark side returns 0.0
 _COS = CF.cosine_sql("a.v", "b.v")
 
-# DuckDB twin of CF.hash60 — shared by every hash-gated split oracle
-_H60 = "('0x' || substr(md5({expr}), 1, 15))::BIGINT"
-
 
 def similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force exact cosine top-10 for 5 query vectors (vec_id<5):
@@ -88,7 +85,7 @@ def embedding_dup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 EMBEDDING_DUP_INC_SQL = f"""
 WITH e AS (SELECT vec_id, label, list_filter(embedding, x -> x IS NOT NULL)::DOUBLE[] AS v,
-                  {_H60.format(expr="vec_id::VARCHAR || '#vinc'")} % 100 < 5 AS inc
+                  {CF.hash60_sql("vec_id::VARCHAR || '#vinc'")} % 100 < 5 AS inc
            FROM embeddings
            WHERE embedding IS NOT NULL
              AND len(list_filter(embedding, x -> x IS NULL)) = 0
@@ -449,7 +446,7 @@ def semantic_decontaminate_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
 SEMANTIC_DECON_SQL = f"""
 WITH e AS (
   SELECT vec_id, list_filter(embedding, x -> x IS NOT NULL)::DOUBLE[] AS v,
-         {_H60.format(expr="vec_id::VARCHAR || '#vbench'")} % 100 < 5 AS is_bench
+         {CF.hash60_sql("vec_id::VARCHAR || '#vbench'")} % 100 < 5 AS is_bench
   FROM embeddings
   WHERE embedding IS NOT NULL
     AND len(list_filter(embedding, x -> x IS NULL)) = 0

@@ -142,6 +142,15 @@ def _input_bytes(path: str) -> int:
     )
 
 
+def _fanout_allowed() -> bool:
+    """``CHILLASTIC_SCAN_FANOUT``: ``auto`` (default) or ``off``, read
+    at call time; any other value raises a ValueError naming it."""
+    raw = os.environ.get("CHILLASTIC_SCAN_FANOUT", "auto")
+    if raw not in ("auto", "off"):
+        raise ValueError(f"CHILLASTIC_SCAN_FANOUT must be auto or off (got {raw!r})")
+    return raw == "auto"
+
+
 def _fanout(
     spark: SparkSession,
     df: DataFrame,
@@ -149,14 +158,12 @@ def _fanout(
     name: str,
     fanout: "bool | None" = None,
 ) -> DataFrame:
+    if not _fanout_allowed():
+        return df
     keys = _FANOUT_KEYS.get(name)
     if fanout is None:
         fanout = name in _FANOUT_DEFAULT
-    if (
-        keys is None
-        or not fanout
-        or os.environ.get("CHILLASTIC_SCAN_FANOUT", "auto") == "off"
-    ):
+    if keys is None or not fanout:
         return df
     try:
         par = spark.sparkContext.defaultParallelism

@@ -1,24 +1,53 @@
 #!/usr/bin/env python
-"""Dump formatted physical plans of the headline queries → PLANS.md.
+"""Dump formatted physical plans of registered queries.
 
-Evidence artifact: shows PushedFilters / pruned ReadSchema / broadcast
-joins / WholeStageCodegen spans for every headliner.
+Two outputs:
+
+* no arguments → PLANS.md: the headline queries plus the subquery/join
+  shapes worth plan-auditing. Shows PushedFilters / pruned ReadSchema /
+  broadcast joins / WholeStageCodegen spans for every headliner.
+* ``--out-dir DIR SUFFIX [QUERY ...]`` → ``DIR/<query>_<SUFFIX>.txt``,
+  one ``explain('formatted')`` per named query (no names → all
+  headliners), so a before/after plan diff backs an optimization
+  claim, e.g. ``python scripts/dump_plans.py --out-dir plans/r10 before``.
+
+The data dir is ``SPARK_GRAFT_SF_DIR`` (default: the sf0.1 testdata dir,
+as in bench.py).
 """
 from __future__ import annotations
 
+import argparse
 import os
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from chillastic_spark.plans import formatted_plan
 from chillastic_spark.queries import all_queries
 from chillastic_spark.session import get_spark
 
-SF = "/root/testdata/sf0.1"
+SF = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 OUT = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "PLANS.md")
 
 
-def main() -> None:
+def dump_dir(out_dir: str, suffix: str, names: "list[str]") -> None:
+    """One plan file per query: ``out_dir/<query>_<suffix>.txt``."""
+    qs = all_queries()
+    if not names:
+        names = [n for n, q in qs.items() if q.headline]
+    os.makedirs(out_dir, exist_ok=True)
+    spark = get_spark("plans")
+    spark.sparkContext.setLogLevel("ERROR")
+    for n in names:
+        df = qs[n].fn(spark, SF)
+        path = os.path.join(out_dir, f"{n}_{suffix}.txt")
+        with open(path, "w") as f:
+            f.write(f"# {n} — sf dir {SF} — explain('formatted')\n")
+            f.write(formatted_plan(df))
+        print(f"wrote {path}")
+
+
+def dump_plans_md() -> None:
     spark = get_spark("plans")
     spark.sparkContext.setLogLevel("ERROR")
     lines = [
@@ -52,8 +81,6 @@ def main() -> None:
         "significant_terms",
         "more_like_this",
     }
-    from chillastic_spark.plans import formatted_plan
-
     qs = all_queries()
     missing = extra - qs.keys()
     if missing:
@@ -104,6 +131,22 @@ below LINEAR scaling — no superlinear candidate blowup in prefix
 postings, band collisions, or gram joins. Sub-10× ratios are dominated
 by fixed job overhead at this data size.
 """
+
+
+def main() -> None:
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("--out-dir", help="write <query>_<suffix>.txt files here")
+    ap.add_argument("suffix", nargs="?", choices=("before", "after"))
+    ap.add_argument("queries", nargs="*", help="query names (default: headliners)")
+    args = ap.parse_args()
+    if args.out_dir is None:
+        if args.suffix or args.queries:
+            ap.error("a suffix and query names need --out-dir")
+        dump_plans_md()
+    else:
+        if args.suffix is None:
+            ap.error("--out-dir needs a suffix: before or after")
+        dump_dir(args.out_dir, args.suffix, args.queries)
 
 
 if __name__ == "__main__":

@@ -119,14 +119,11 @@ def test_prefix_jaccard_equals_baseline_on_real_corpus(spark):
 def test_prefix_jaccard_reduces_candidates(spark):
     """The point of the prefix variant: strictly fewer candidate pairs
     reach verification than the plain join co-occurrence count."""
-    import chillastic_spark.functions as CF
     from pyspark.sql.window import Window
 
     d = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     t = 0.5
-    g = D.shingles(d, "doc_id", "text", 3).withColumn(
-        "gh", CF.hash60("gram")
-    ).drop("gram")
+    g = D.shingles(d, "doc_id", "text", 3)
     a, b = g.alias("a"), g.alias("b")
     full = (
         a.join(

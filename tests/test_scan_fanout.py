@@ -60,6 +60,17 @@ def test_fanout_env_kill_switch(spark, monkeypatch):
     assert T.load(spark, SF01, "documents").rdd.getNumPartitions() == 1
 
 
+@pytest.mark.parametrize("bad", ["OFF", "0", "", "on", "Auto", "false"])
+def test_malformed_fanout_knob_is_rejected(spark, monkeypatch, bad):
+    # only auto/off exist: a near-miss such as 'OFF' or '0' must not
+    # leave the fan-out silently on
+    monkeypatch.setenv("CHILLASTIC_SCAN_FANOUT", bad)
+    with pytest.raises(ValueError, match="CHILLASTIC_SCAN_FANOUT must be auto or off"):
+        T.load(spark, SF01, "documents")
+    with pytest.raises(ValueError, match="CHILLASTIC_SCAN_FANOUT"):
+        T.load(spark, SF01, "nation")  # checked for every table
+
+
 def test_fanout_noop_when_layout_already_parallel(spark, tmp_path):
     # write the same table as many small files: the task estimate
     # clears defaultParallelism and the fan-out must NOT fire

@@ -88,19 +88,21 @@ def test_cap_gate_is_document_frequency(skew_docs):
     from chillastic_spark.operators.dedup import cap_hot_grams, shingles
     from chillastic_spark import functions as CF
 
-    g = shingles(skew_docs, "doc_id", "text", 3).withColumn(
-        "gh", CF.hash60("gram")
-    )
-    capped = cap_hot_grams(g.select("doc_id", "gh"), skew_docs, 0.2)
+    g = shingles(skew_docs, "doc_id", "text", 3)
+    capped = cap_hot_grams(g, skew_docs, 0.2)
     # hot-phrase interior gram: present in >30% of docs → dropped
     hot_docs = capped.join(
-        g.filter(F.col("gram") == HOT).select("gh").distinct(), "gh", "semi"
+        g.filter(F.col("gh") == CF.hash60(F.lit(HOT))).select("gh").distinct(),
+        "gh",
+        "semi",
     )
     assert hot_docs.count() == 0
     # a template gram (12/74 docs ≈ 16%) survives
     tpl_gram = " ".join(TEMPLATE.split()[:3])
     tpl = capped.join(
-        g.filter(F.col("gram") == tpl_gram).select("gh").distinct(), "gh", "semi"
+        g.filter(F.col("gh") == CF.hash60(F.lit(tpl_gram))).select("gh").distinct(),
+        "gh",
+        "semi",
     )
     assert tpl.count() == 12
 
@@ -230,6 +232,41 @@ def test_incremental_embedding_dedup_exact_under_hot_pool(spark):
             if c >= 0.5:
                 want[(i, j)] = c
     assert got == want and len(want) > 50
+
+
+@pytest.mark.parametrize(
+    "var,bad",
+    [
+        ("CHILLASTIC_HOT_GRAM_PREFLIGHT", v)
+        for v in ("", "2", "yes", "on", "true", " 1")
+    ]
+    + [
+        ("CHILLASTIC_HOT_GRAM_WARN_FRAC", v)
+        for v in ("", "abc", "nan", "inf", "-0.1", "0", "1.5")
+    ],
+)
+def test_malformed_hot_gram_knob_is_rejected(skew_docs, monkeypatch, var, bad):
+    """Both knobs are parsed together at call time: PREFLIGHT in {0, 1},
+    WARN_FRAC finite in (0, 1]. A bad value fails the uncapped pair
+    generator before any job runs, with the variable's name and range."""
+    from chillastic_spark.operators.dedup import _hot_gram_knobs, ngram_jaccard_pairs
+
+    monkeypatch.setenv(var, bad)
+    with pytest.raises(ValueError, match=var):
+        _hot_gram_knobs()
+    with pytest.raises(ValueError, match=var):
+        ngram_jaccard_pairs(skew_docs, n=3, threshold=0.2)
+
+
+def test_hot_gram_knob_values_in_range_are_accepted(monkeypatch):
+    from chillastic_spark.operators.dedup import _hot_gram_knobs
+
+    assert _hot_gram_knobs() == (True, 0.2)  # defaults
+    monkeypatch.setenv("CHILLASTIC_HOT_GRAM_PREFLIGHT", "0")
+    monkeypatch.setenv("CHILLASTIC_HOT_GRAM_WARN_FRAC", "1")
+    assert _hot_gram_knobs() == (False, 1.0)
+    monkeypatch.setenv("CHILLASTIC_HOT_GRAM_WARN_FRAC", "1e-3")
+    assert _hot_gram_knobs() == (False, 0.001)
 
 
 def test_knn_graph_bounded_and_exact_under_hot_bucket(spark):
